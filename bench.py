@@ -109,23 +109,14 @@ def build_tin_pack(spark, n_points: int):
     6.0 m halo fans each point out ~1.9x at 1.6M points on the 478 m
     extent, and that factor squares inside the O(n^2) per-cell
     Delaunay; adaptivity keeps the fan-out ~1.3x with the certificate
-    standing in for the old constant's safety margin. If certification
-    ever fails (degenerate density), fall back to the conservative
-    fixed halo."""
+    standing in for the old constant's safety margin."""
     from gpiv_spark.operators.tin import _EXT, build_broadcast_pack
 
     halo = min(6.0, max(1.0, 6.0 * _EXT / max(1.0, float(n_points)) ** 0.5))
-    try:
-        return build_broadcast_pack(
-            spark, bench_points(spark, n_points),
-            cell_res=4, index_res=9, halo_m=halo, id_col="pid",
-            certify=True,
-        )
-    except ValueError:
-        return build_broadcast_pack(
-            spark, bench_points(spark, n_points),
-            cell_res=4, index_res=9, halo_m=6.0, id_col="pid",
-        )
+    return build_broadcast_pack(
+        spark, bench_points(spark, n_points),
+        cell_res=4, index_res=9, halo_m=halo, id_col="pid",
+    )
 
 
 def doc_stream_df(spark, n_docs: int, bc, n_tasks: int = 64):
@@ -201,80 +192,6 @@ def doc_stream_df(spark, n_docs: int, bc, n_tasks: int = 64):
 
 def doc_stream(spark, n_docs: int, bc, n_tasks: int = 64):
     return doc_stream_df(spark, n_docs, bc, n_tasks).collect()[0]
-
-
-def doc_pipeline(spark, n_docs: int, n_points: int):
-    """North-rule headline: spatial join + error propagation per doc.
-
-    (Shuffle-join variant, kept for tests/oracle parity; the bench
-    headline uses the broadcast-index phases above.)
-    """
-    from pyspark.sql import functions as F
-
-    from gpiv_spark.dialect import SPARK as d
-    from gpiv_spark.functions import cells, geocode
-    from gpiv_spark.operators import pip as pip_op
-    from gpiv_spark.operators import tiling
-    from gpiv_spark.operators.tin import build_triangles, propagate_at
-
-    docs = spark.range(n_docs).select(F.col("id").alias("doc_id"))
-    x = geocode.x_expr(d, "doc_id")
-    y = geocode.y_expr(d, "doc_id")
-    geo = docs.select(
-        "doc_id",
-        F.expr(x).alias("x"),
-        F.expr(y).alias("y"),
-        F.expr(cells.zcell_expr(d, x, y, 6)).alias("cell_id"),
-        F.expr(geocode.px_row_expr(d, y)).alias("px_row"),
-        F.expr(geocode.px_col_expr(d, x)).alias("px_col"),
-    )
-    geo = tiling.assign_tiles(geo, tiling.PivConfig())
-    roi = spark.createDataFrame(
-        pip_op.roi_triangles(),
-        "roi_id int, x1 double, y1 double, x2 double, y2 double, "
-        "x3 double, y3 double",
-    ).alias("r")
-    pred = pip_op.inside_triangle_pred(
-        "g.x", "g.y", {k: f"r.{k}" for k in ("x1", "y1", "x2", "y2", "x3", "y3")}
-    )
-    joined = geo.alias("g").join(F.broadcast(roi), F.expr(pred), "left").select(
-        F.col("g.doc_id").alias("grid_id"), "g.x", "g.y",
-        "g.tile_r", "g.tile_c", "r.roi_id",
-    )
-
-    pts = spark.range(n_points).select(F.col("id").alias("pid"))
-    px = geocode.xq_expr(d, "pid")
-    py = geocode.yq_expr(d, "pid")
-    points = pts.select(
-        F.expr(px).alias("x"),
-        F.expr(py).alias("y"),
-        F.expr(
-            f"5.0 + 0.01 * ({px} - {geocode.X0!r}) + 0.004 * ({py} - {geocode.Y0!r})"
-            f" + 0.00005 * (({px} - {geocode.X0!r}) * ({py} - {geocode.Y0!r}))"
-        ).alias("z"),
-        F.expr("(1 + pid % 7) * 0.0001").alias("var_x"),
-        F.expr("(1 + pid % 5) * 0.0001").alias("var_y"),
-        F.expr("(1 + pid % 3) * 0.0001").alias("var_z"),
-        F.lit(0.0).alias("cov_xy"),
-        F.lit(0.0).alias("cov_xz"),
-        F.lit(0.0).alias("cov_yz"),
-    )
-    tris = build_triangles(spark, points, cell_res=4, halo_m=6.0)
-    tris = tris.cache()
-    tris.count()  # build the TIN once; propagate_at reads it twice
-    prop = propagate_at(
-        joined.select(F.col("grid_id").alias("doc_id"), "x", "y"),
-        tris,
-        index_res=9,
-        centroid=(geocode.X0 + 239.0, geocode.Y0 + 239.0, 7.0),
-    )
-    row = prop.agg(
-        F.count("*").alias("n"),
-        F.avg("var_zp").alias("mean_var"),
-        F.avg("zp").alias("mean_zp"),
-    ).collect()[0]
-    tris.unpersist()
-    return row
 
 
 def headline_child(cpus: int, n_docs: int, n_points: int) -> None:

@@ -5,8 +5,8 @@ Modes:
       capture for the bench query subset -> plans/r06/<name>_{when}.txt
       (set PLANS_WHEN=before|after; default after)
   python bench_extra.py build CPUS NPTS      certified pack-build wall
-  python bench_extra.py tin_shuffle          large-TIN shuffle path
-      (propagate_at broadcast_triangles=False) timing + Exchange count
+  python bench_extra.py tin_shuffle          large-TIN shuffle plan
+      (tin.propagate_plan 'shuffle') timing + Exchange count
       (VERDICT r5 #4)
   python bench_extra.py mor_pos              positional-delete MoR apply
       at scale (VERDICT r5 #5)
@@ -79,13 +79,13 @@ def run_queries(names: list[str]) -> None:
 
 
 def run_tin_shuffle() -> None:
-    """Time the distributed-join TIN path at a scale where the pack
+    """Time the distributed-join TIN plan at a scale where the pack
     would bust the broadcast budget (>4M points => >1 GB pack): this is
-    the plan a 100-TB cloud takes (propagate_auto falls back to it)."""
+    the plan a 100-TB cloud takes (tin.choose_plan picks it)."""
     from pyspark.sql import functions as F
 
     import bench
-    from gpiv_spark.operators.tin import build_triangles, propagate_at
+    from gpiv_spark.operators.tin import certified_blobs, propagate_plan
 
     n_points = int(os.environ.get("TIN_SHUFFLE_POINTS", "4200000"))
     n_docs = int(os.environ.get("TIN_SHUFFLE_DOCS", "20000000"))
@@ -103,22 +103,21 @@ def run_tin_shuffle() -> None:
     cen = (geocode.X0 + 239.0, geocode.Y0 + 239.0, 7.0)
     halo = min(6.0, max(1.0, 6.0 * geocode.EXTENT / n_points ** 0.5))
     t0 = time.time()
-    tris = build_triangles(spark, pts, cell_res=4, halo_m=halo)
-    tris = tris.cache()
-    n_tris = tris.count()
+    blobs = certified_blobs(spark, pts, cell_res=4, index_res=9,
+                            halo_m=halo, id_col="pid", collect=False)
+    n_tris = blobs.agg(F.sum("n_tri")).first()[0]
     t_build = time.time() - t0
     best = float("inf")
     plan = ""
     for _ in range(2):
-        out = propagate_at(geo, tris, index_res=9, centroid=cen,
-                           broadcast_triangles=False)
+        out = propagate_plan(spark, geo, blobs, "shuffle", index_res=9,
+                             centroid=cen)
         agg = out.agg(F.count("*").alias("n"), F.avg("var_zp"))
         plan = agg._sc._jvm.PythonSQLUtils.explainString(
             agg._jdf.queryExecution(), "formatted")
         t0 = time.time()
         row = agg.collect()[0]
         best = min(best, time.time() - t0)
-    tris.unpersist()
     n_exchanges = plan.count("Exchange")
     out_dir = Path(__file__).resolve().parent / "plans" / "r06"
     out_dir.mkdir(parents=True, exist_ok=True)

@@ -112,7 +112,7 @@ def pack_patches(df: DataFrame, cfg: PivConfig) -> DataFrame:
     # count), not the global shuffle default: the ~20 ms python-task
     # handshake does not parallelize (see CLAUDE.md), so 64 mostly-empty
     # tasks cost more than the packing itself on small rasters, while
-    # big rasters still fan out (cap 64 = KERNEL_TASKS discipline).
+    # big rasters still fan out (capped at a fixed 64 tasks).
     # Explicit hash repartition on the group keys also pre-satisfies the
     # groupBy distribution, so no second exchange is inserted.
     n_groups = 4 * (-(-cfg.dim // step)) ** 2  # <= 4 datasets
@@ -230,7 +230,7 @@ def _run_piv_from_patches(spark: SparkSession, patches: DataFrame,
     def _tile_kernel(key, pdf):
         return _piv_tile(key, pdf, cfg_d)
 
-    # one task per tile up to the KERNEL_TASKS cap (same rationale as
+    # one task per tile up to a fixed 64-task cap (same rationale as
     # pack_patches: handshake cost vs mostly-empty partitions)
     npart = max(8, min(64, cfg.count * cfg.count))
     return (

@@ -1,28 +1,43 @@
 """Distributed TIN interpolation + error propagation (SURVEY §2 J1-J3,
 P1-P3, P5, E3, F4).
 
-Physical plan (tin_interpolation.py:35-58, re-expressed for Spark):
+Two jobs live here.
 
-1. points and grid cells are encoded to Z-order cells (the engine's
-   partition key);
-2. points are fanned out to their cell AND its 8 neighbors (the halo:
-   one full cell ring — local Delaunay is correct wherever the
-   containing triangle's circumcircle fits inside the halo, SURVEY
-   §7.3; cell size is chosen >= a few mean point spacings);
-3. ``groupBy(cell).cogroup(...).applyInPandas`` pairs each cell's
-   grid points with its haloed point set; the kernel runs the
-   from-scratch Bowyer-Watson (J1), containment query (J2,
-   find_simplex == -1 -> NaN row, F4), vertex gather (J3), centroid
-   conditioning (P1), plane coeffs (P2), interpolation (P3), partial
-   derivatives (P5) and the block-diagonal quadratic form (E3) — all
-   vectorized NumPy, one Python call per cell.
+``tin_interpolate`` is the exact per-cell reference (tin_interpolation.py
+:35-58 re-expressed for Spark): points fan out to their Z-order cell
+plus a halo band, ``cogroup(...).applyInPandas`` pairs each cell's grid
+points with its haloed point set, and one NumPy call per cell runs
+Bowyer-Watson (J1), containment (J2, miss -> NaN row, F4), vertex
+gather (J3), centroid conditioning (P1), plane coeffs (P2),
+interpolation (P3), partials (P5) and the E3 quadratic form. It is the
+oracle-gated kernel behind the ``tin_var`` golden.
 
-Skew: the fan-out is bounded (9x) and cells are equal-area; hot cells
-(doc clustering) are split by the optional salt on the grid side.
-At 100 TB the shuffle carries (cell, x, y, z, 6 tpu) doubles only.
+The doc-scale job has ONE triangulation producer and one plan switch:
+
+1. ``certified_blobs``: one kernel call per coarse cell
+   (``_make_cell_blob_kernel``) triangulates the cell plus its halo,
+   keeps the triangles it owns, certifies each of them against the
+   halo it saw, and packs its shard (owned points, triangles as global
+   point ids, fine-cell covering pairs) into a binary blob. The repair
+   ladder rebuilds failed cells until every emitted triangle is in the
+   global Delaunay.
+2. ``choose_plan`` reads the point count off the certified blobs and
+   picks a physical plan for the doc probe; ``propagate_plan`` runs it:
+   - broadcast: ``merge_pack_blobs`` -> ``PackFileHandle`` (mmap'd
+     pack) -> shuffle-free ``mapInPandas`` probe (``probe_docs``);
+   - shuffle: ``triangles_from_blobs`` -> fine-cell equi-join plus
+     refine in Catalyst (``propagate_at``); no node holds the whole TIN.
+   Both plans read the same certified triangles, so one request gets
+   one answer whichever plan runs.
+
+Skew: the fan-out is bounded (cell + halo band) and cells are
+equal-area.
 """
 
 from __future__ import annotations
+
+import functools
+import math
 
 import numpy as np
 import pandas as pd
@@ -39,21 +54,15 @@ TIN_SCHEMA = (
 
 TPU_COLS = ["var_x", "var_y", "var_z", "cov_xy", "cov_xz", "cov_yz"]
 
-# Fixed task count for the applyInPandas kernel stages. Fixed (not
+# Fixed task count for the pack-build kernel stage. Fixed (not
 # cores-derived) so task granularity is identical at every measured
-# parallelism level, and small: each Python task costs ~20 ms of
-# serialized runner handshake regardless of size (measured: 128 no-op
-# mapInPandas tasks = 2.8 s at ANY core count), so fewer, bigger tasks
-# win as long as waves stay balanced (64 = 2 waves at 32 cores).
-KERNEL_TASKS = 64
-# The PACK BUILD's task-count tradeoff flipped in round 6: with the C
-# Delaunay core the per-cell kernel is ~20x cheaper, so per-task
-# channel/handshake overhead outweighs wave balance. Re-measured
+# parallelism level, and small: each Python task pays a fixed runner
+# handshake, and with the C Delaunay core the per-cell kernel is cheap
+# enough that this overhead outweighs wave balance. Re-measured
 # (best-of-2 certified builds): 32 cores/1.6M pts 10.6 s (128 tasks)
 # -> 9.8 s (64); 8 cores/400k 5.2/4.3 -> 4.2/4.5. 32 tasks is
 # slightly faster still at 8 cores but leaves a single skew-sensitive
-# wave at 32 cores; 64 keeps two waves. (Pre-C-kernel, 128 beat 64 at
-# 32 cores — the r5 measurement in git history.)
+# wave at 32 cores; 64 keeps two waves.
 PACK_TASKS = 64
 
 
@@ -254,18 +263,19 @@ from gpiv_spark.functions.geocode import EXTENT as _EXT, X0 as _X0, Y0 as _Y0  #
 
 
 # ---------------------------------------------------------------------------
-# Scale path: triangle table + JVM-side containment/propagation join.
+# Scale path: certified per-cell blobs -> one of two doc-probe plans.
 #
-# The cogrouped kernel above is the exact per-cell reference semantics;
-# for doc-scale throughput (10^12 docs) the winning plan is:
-#   1. build the TIN ONCE as a DataFrame of triangles (per coarse cell,
-#      halo'd Delaunay, each triangle owned by the cell containing its
-#      centroid -> no duplicates), exploded to the fine Z-order cells
-#      its bbox covers (Raptor-style equi+refine index);
-#   2. stream documents through an equi-join on the fine cell plus a
-#      barycentric-sign refine and the P2/P3/P5/E3 closed forms — all
-#      Catalyst column arithmetic, zero Python per doc.
-# Python cost is O(points); per-doc cost is wholly JVM codegen.
+# tin_interpolate above is the exact per-cell reference; for doc-scale
+# throughput (10^12 docs) the TIN is built ONCE, distributed, as one
+# blob per coarse cell (halo'd Delaunay, each triangle owned by the
+# cell containing its centroid -> no duplicates, each owned triangle
+# certified against the halo its kernel saw). The blobs then feed
+# either the broadcast pack (merge_pack_blobs: Python cost O(points),
+# docs probed worker-side with no shuffle) or the triangle table
+# (triangles_from_blobs: docs equi-join it on the fine Z-order cells
+# its bbox covers, Raptor-style, then a barycentric refine and the
+# P2/P3/P5/E3 closed forms as Catalyst column arithmetic). choose_plan
+# is the only place that picks between them.
 # ---------------------------------------------------------------------------
 
 TRI_SCHEMA = (
@@ -278,128 +288,10 @@ TRI_SCHEMA = (
     )
 )
 
-
-def build_triangles(spark: SparkSession, points: DataFrame, cell_res: int = 4,
-                    halo_m: float | None = None) -> DataFrame:
-    """Distributed Delaunay -> triangle table (one row per owned triangle).
-
-    Ownership = the coarse cell containing the triangle centroid, so the
-    union over cells is duplicate-free. Index to fine cells afterwards
-    via index_triangles (Spark, shuffle path) or pack_triangle_index
-    (driver-side NumPy, broadcast path).
-    """
-    n = 1 << cell_res
-    pts = fan_out_points(spark, points, cell_res, halo_m)
-
-    csize = _EXT / n
-
-    def _cell_tris(key, pdf):
-        import numpy as _np
-
-        cell = int(key[0])
-        cy, cx = divmod(cell, n)
-        x_lo, x_hi = _X0 + cx * csize, _X0 + (cx + 1) * csize
-        y_lo, y_hi = _Y0 + cy * csize, _Y0 + (cy + 1) * csize
-        # deterministic duplicate-XY keeper (see _cell_kernel)
-        pdf = pdf.sort_values(
-            list(pdf.columns), kind="mergesort"
-        ).drop_duplicates(subset=["x", "y"])
-        p = pdf[["x", "y", "z"]].to_numpy(dtype=_np.float64)
-        tpu = pdf[TPU_COLS].to_numpy(dtype=_np.float64)
-        cols = (["tri_id"]
-                + [f"{c}{k}" for k in (1, 2, 3) for c in ("x", "y", "z")]
-                + [f"{t}_{k}" for k in (1, 2, 3) for t in TPU_COLS])
-        if len(p) < 3:
-            return pd.DataFrame(columns=cols)
-        tri = dl.delaunay(p[:, :2])
-        if len(tri) == 0:
-            return pd.DataFrame(columns=cols)
-        cen_x = p[tri, 0].mean(axis=1)
-        cen_y = p[tri, 1].mean(axis=1)
-        own = (cen_x >= x_lo) & (cen_x < x_hi) & (cen_y >= y_lo) & (cen_y < y_hi)
-        tri = tri[own]
-        if len(tri) == 0:
-            return pd.DataFrame(columns=cols)
-        vx = p[tri, 0]
-        vy = p[tri, 1]
-        vz = p[tri, 2]
-        # cell-scoped unique id (cells own disjoint triangle sets)
-        data = {"tri_id": cell * (1 << 24) + _np.arange(len(tri), dtype=_np.int64)}
-        for k in range(3):
-            data[f"x{k + 1}"] = vx[:, k]
-            data[f"y{k + 1}"] = vy[:, k]
-            data[f"z{k + 1}"] = vz[:, k]
-            tp = tpu[tri[:, k]]
-            for ti, t in enumerate(TPU_COLS):
-                data[f"{t}_{k + 1}"] = tp[:, ti]
-        base = pd.DataFrame(data)
-        return base
-
-    # Pin the kernel stage's parallelism: an explicit hash repartition on
-    # the group key satisfies applyInPandas' distribution requirement, so
-    # no further exchange is inserted and AQE cannot byte-coalesce the
-    # CPU-bound Delaunay tasks down to a handful.
-    npart = KERNEL_TASKS
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInPandas(_cell_tris, TRI_SCHEMA)
-    )
-
-
+# blob shard fields exploded by triangles_from_blobs (names = shard keys)
 TRI_ID_SCHEMA = "tri_id long, v1 long, v2 long, v3 long"
-
-
-def build_triangle_ids(spark: SparkSession, points: DataFrame,
-                       cell_res: int = 4, halo_m: float | None = None,
-                       id_col: str = "point_id") -> DataFrame:
-    """Normalized variant of build_triangles: (tri_id, v1, v2, v3) rows
-    referencing global point ids — the payload the broadcast pack wants
-    (3 ints/triangle instead of 27 doubles; the vertex gather happens
-    worker-side against the much smaller points table)."""
-    n = 1 << cell_res
-    pts = fan_out_points(spark, points, cell_res, halo_m, extra_cols=(id_col,))
-    csize = _EXT / n
-
-    def _cell_tri_ids(key, pdf):
-        import numpy as _np
-
-        cell = int(key[0])
-        cy, cx = divmod(cell, n)
-        x_lo, x_hi = _X0 + cx * csize, _X0 + (cx + 1) * csize
-        y_lo, y_hi = _Y0 + cy * csize, _Y0 + (cy + 1) * csize
-        # deterministic keeper: min id wins for coincident XY
-        pdf = pdf.sort_values(id_col, kind="mergesort").drop_duplicates(
-            subset=["x", "y"])
-        p = pdf[["x", "y"]].to_numpy(dtype=_np.float64)
-        pid = pdf[id_col].to_numpy(dtype=_np.int64)
-        if len(p) < 3:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        tri = dl.delaunay(p)
-        if len(tri) == 0:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        cen_x = p[tri, 0].mean(axis=1)
-        cen_y = p[tri, 1].mean(axis=1)
-        own = ((cen_x >= x_lo) & (cen_x < x_hi)
-               & (cen_y >= y_lo) & (cen_y < y_hi))
-        tri = tri[own]
-        if len(tri) == 0:
-            return pd.DataFrame(columns=["tri_id", "v1", "v2", "v3"])
-        return pd.DataFrame(
-            {
-                "tri_id": cell * (1 << 24) + _np.arange(len(tri), dtype=_np.int64),
-                "v1": pid[tri[:, 0]],
-                "v2": pid[tri[:, 1]],
-                "v3": pid[tri[:, 2]],
-            }
-        )
-
-    npart = KERNEL_TASKS
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInPandas(_cell_tri_ids, TRI_ID_SCHEMA)
-    )
+_SHARD_POINT_SCHEMA = ("pid long, px double, py double, pz double, "
+                       + ", ".join(f"p_{t} double" for t in TPU_COLS))
 
 
 PACK_BLOB_SCHEMA = ("cell long, n_pts long, n_tri long, n_pairs long, "
@@ -707,6 +599,9 @@ def merge_pack_blobs(blob_rows, index_res: int) -> dict:
     def cat(name, dtype):
         return np.concatenate([s[name] for s in shards]).astype(dtype, copy=False)
 
+    # "normalized" names the vertex-indexed layout (points once, triangles
+    # as int32 rows into them), now the only one; kept so the pack's
+    # contents, and hashes taken of them, stay unchanged
     pack = {"nf": nf, "normalized": True}
 
     # The covering-pair pipeline (concat + radix argsort + gather +
@@ -786,7 +681,9 @@ def merge_pack_blobs(blob_rows, index_res: int) -> dict:
 
 # Per-process cache of opened pack views (worker processes are reused
 # across tasks; the mmap views live as long as the handle's directory
-# key stays cached).
+# key stays cached). A miss evicts every other pack's views: a reused
+# worker never sees the driver's destroy(), so without eviction it
+# would keep the deleted files of every earlier build mapped.
 _PACK_CACHE: dict = {}
 
 
@@ -837,6 +734,7 @@ class PackFileHandle:
 
         d = _PACK_CACHE.get(self._dir)
         if d is None:
+            _PACK_CACHE.clear()
             base = self._dir
             if not os.path.isdir(base):  # executor without shared fs
                 from pyspark import SparkFiles
@@ -859,125 +757,199 @@ class PackFileHandle:
         _PACK_CACHE.pop(self._dir, None)
 
 
-def build_broadcast_pack(spark: SparkSession, points: DataFrame,
-                         cell_res: int = 4, index_res: int = 9,
-                         halo_m: float | None = None,
-                         id_col: str = "point_id", certify: bool = False):
-    """points -> distributed Delaunay+pack -> merged pack -> Broadcast.
+_BLOB_COUNTERS = ("cell", "n_uncert", "halo_need", "n_outside")
 
-    ``certify=True`` enforces the per-triangle halo-sufficiency
-    certificate and REPAIRS failures: cells with uncertified owned
-    triangles (in practice a handful of hull-edge cells whose sliver
-    circumcircles run along the data boundary) are rebuilt with a
-    doubled halo — only their fan-in rows reshuffle — until every
-    owned triangle certifies. This is what makes a density-adaptive
-    halo safe: the fixed-metre default is wasteful on dense clouds and
-    silently insufficient on sparse ones. The certificate guarantees
-    every EMITTED triangle is globally Delaunay (soundness);
-    completeness of the thin band between the local and global convex
-    hulls is not claimed (F4 hull-membership probes there return NULL
-    either way).
+
+def certified_blobs(spark: SparkSession, points: DataFrame,
+                    cell_res: int = 4, index_res: int = 9,
+                    halo_m: float | None = None,
+                    id_col: str = "point_id", collect: bool = True):
+    """points -> per-cell pack blobs whose every owned triangle carries
+    the halo-sufficiency certificate (the one TIN producer).
+
+    Cells with uncertified owned triangles (in practice a handful of
+    hull-edge cells whose sliver circumcircles run along the data
+    boundary) are rebuilt with wider halos — only their fan-in rows
+    reshuffle — until every owned triangle certifies. This is what
+    makes a density-adaptive halo safe: the fixed-metre default is
+    wasteful on dense clouds and silently insufficient on sparse ones.
+    The certificate guarantees every EMITTED triangle is globally
+    Delaunay (soundness); completeness of the thin band between the
+    local and global convex hulls is not claimed (F4 hull-membership
+    probes there return NULL either way).
+
+    ``collect=True`` (build_broadcast_pack) brings each round's blob
+    table to the driver in one Spark job and returns the certified rows
+    as a list of ``{"payload": bytes}`` dicts for merge_pack_blobs — the
+    merge needs every payload on the driver anyway. ``collect=False``
+    keeps the payloads on the executors: each round is local-checkpointed
+    (so reading its counters does not re-run the kernels), the ladder
+    reads only the counter columns, and the result is a PACK_BLOB_SCHEMA
+    DataFrame with one row per cell.
     """
     csize = _EXT / (1 << cell_res)
-    if not certify:
-        blobs = build_pack_blobs(spark, points, cell_res, index_res,
-                                 halo_m, id_col)
-        pack = merge_pack_blobs(blobs.toArrow(), index_res)
-        return PackFileHandle(spark, pack)
+    rounds = []  # per build round: its blob table (collect) or DataFrame
+    owner = {}  # cell -> index of the round whose shard the cell keeps
+
+    def run(blobs):
+        """Materialize one build round -> (failed cells, max halo_need)."""
+        if collect:
+            counters = blobs.toArrow()
+            rounds.append(counters)
+        else:
+            blobs = blobs.localCheckpoint()
+            rounds.append(blobs)
+            counters = blobs.select(*_BLOB_COUNTERS).toArrow()
+        strays = int(sum(counters.column("n_outside").to_pylist()))
+        if strays:
+            raise ValueError(
+                f"{strays} points lie outside the nominal extent: the "
+                "certificate's bbox clamp is unsound for this cloud — "
+                "re-extent the data")
+        cells = counters.column("cell").to_pylist()
+        owner.update(dict.fromkeys(cells, len(rounds) - 1))
+        failed = [c for c, u in zip(cells,
+                                    counters.column("n_uncert").to_pylist())
+                  if u]
+        # a zero-area owned triangle has no finite circumcircle: its cell
+        # reports a NaN need (null once in Arrow), and the ladder's
+        # doubling alone carries that cell's retries
+        needs = [h for h in counters.column("halo_need").to_pylist()
+                 if h is not None and not math.isnan(h)]
+        return failed, max(needs, default=0.0)
 
     # extent-boundary cells get 4x the halo up front: hull slivers
     # along the data edge are where the certificate fails in practice,
     # and paying their wider fan-in immediately beats a whole extra
     # retry job (capped at csize — the 8-ring's reach).
     base_halo = csize if halo_m is None else halo_m
-    blobs = build_pack_blobs(spark, points, cell_res, index_res, halo_m,
-                             id_col,
-                             edge_halo_m=min(4.0 * base_halo, csize))
-    arr = blobs.toArrow()
-
-    strays = int(sum(arr.column("n_outside").to_pylist()))
-    if strays:
-        raise ValueError(
-            f"{strays} points lie outside the nominal extent: the "
-            "certificate's bbox clamp is unsound for this cloud — "
-            "re-extent the data or pass halo_m=None")
-    payload_by_cell = dict(zip(arr.column("cell").to_pylist(),
-                               arr.column("payload").to_pylist()))
-    failed = [c for c, u in zip(arr.column("cell").to_pylist(),
-                                arr.column("n_uncert").to_pylist()) if u]
-    halo_need = max(arr.column("halo_need").to_pylist(), default=0.0)
-    # Repair ladder (round 6 shape): (1) cheap in-ring halo doublings
-    # via only_cells, exactly as before; (2) if failures remain and are
-    # WIDESPREAD (a large share of populated cells), the grid itself is
-    # too fine for the cloud's density — coarsen globally, the round-5
-    # behavior, which also keeps the hull-band completeness of a
-    # coarser rebuild; (3) if only a FEW stubborn cells remain (dense
-    # clouds: hull slivers along the extent edge), rebuild just those
-    # cells with halos beyond the 8-ring's reach
-    # (build_pack_blobs_at_cells) instead of re-running the whole
-    # build one resolution coarser — the old coarsen path measured
-    # ~12 s of the 23 s 8-core/400k-point bench build for ONE stubborn
+    halo_r = min(4.0 * base_halo, csize)
+    failed, halo_need = run(build_pack_blobs(
+        spark, points, cell_res, index_res, halo_m, id_col,
+        edge_halo_m=halo_r))
+    # Repair ladder: (1) if failures are WIDESPREAD (a large share of
+    # populated cells), walk cheap in-ring halo doublings via
+    # only_cells; if most cells still fail, the grid itself is too fine
+    # for the cloud's density — coarsen globally, which also keeps the
+    # hull-band completeness of a coarser rebuild; (2) once only a FEW
+    # stubborn cells remain (dense clouds: hull slivers along the
+    # extent edge), rebuild just those cells with halos beyond the
+    # 8-ring's reach (build_pack_blobs_at_cells) instead of re-running
+    # the whole build one resolution coarser — the coarsen path
+    # measured ~12 s of a 23 s 8-core/400k-point build for ONE stubborn
     # cell. At halo >= n*csize a retried kernel sees the entire cloud
     # and the certificate's cell+halo region contains the whole data
     # bbox, so the targeted loop provably terminates.
-    halo_r = min(4.0 * base_halo, csize)
-    few = max(2, 0.05 * len(payload_by_cell))
+    few = max(2, 0.05 * len(owner))
     if len(failed) > few:
-        # widespread failures: walk the cheap in-ring ladder first (it
-        # fixes interior cells whose adaptive halo was merely a bit
-        # small), then coarsen if most cells still fail — the grid
-        # itself is too fine for this cloud's density
         while failed and halo_r < csize:
             halo_r = min(2.0 * halo_r, csize)
-            retry = build_pack_blobs(spark, points, cell_res, index_res,
-                                     halo_r, id_col, only_cells=failed,
-                                     edge_halo_m=halo_r).toArrow()
-            payload_by_cell.update(zip(retry.column("cell").to_pylist(),
-                                       retry.column("payload").to_pylist()))
-            failed = [c for c, u in zip(retry.column("cell").to_pylist(),
-                                        retry.column("n_uncert").to_pylist())
-                      if u]
+            failed, halo_need = run(build_pack_blobs(
+                spark, points, cell_res, index_res, halo_r, id_col,
+                only_cells=failed, edge_halo_m=halo_r))
         if failed and cell_res > 0 and len(failed) > few:
-            return build_broadcast_pack(spark, points, cell_res - 1,
-                                        index_res, halo_m, id_col,
-                                        certify=True)
+            return certified_blobs(spark, points, cell_res - 1, index_res,
+                                   halo_m, id_col, collect)
     max_halo = (1 << cell_res) * csize
     while failed:
         # one wide-reach rebuild of just the stubborn cells, at the
-        # halo the certificate REPORTED it needs (+2% slack) — the old
-        # in-ring-then-blind-doubling chain spent two sequential Spark
-        # jobs (~3 s of the 6 s 8-core/400k bench build) fixing 2
-        # cells. A wider build can surface new slivers with their own
-        # reported need; doubling is the progress guarantee when the
-        # report alone does not grow.
+        # halo the certificate REPORTED it needs (+2% slack) — a blind
+        # doubling chain spent two sequential Spark jobs (~3 s of a 6 s
+        # 8-core/400k build) fixing 2 cells. A wider build can surface
+        # new slivers with their own reported need; doubling is the
+        # progress guarantee when the report alone does not grow.
         halo_r = min(max(1.02 * halo_need, 2.0 * halo_r), max_halo)
-        retry = build_pack_blobs_at_cells(
-            spark, points, failed, cell_res, index_res, halo_r,
-            id_col).toArrow()
-        payload_by_cell.update(zip(retry.column("cell").to_pylist(),
-                                   retry.column("payload").to_pylist()))
-        failed = [c for c, u in zip(retry.column("cell").to_pylist(),
-                                    retry.column("n_uncert").to_pylist())
-                  if u]
-        halo_need = max(retry.column("halo_need").to_pylist(),
-                        default=0.0)
+        failed, halo_need = run(build_pack_blobs_at_cells(
+            spark, points, failed, cell_res, index_res, halo_r, id_col))
         if failed and halo_r >= max_halo:
             raise ValueError(
                 f"halo certificate still failing for cells {failed[:8]} "
                 f"at a whole-extent halo ({halo_r:.1f} m) — unreachable "
                 "unless the certificate itself is broken")
-    pack = merge_pack_blobs(
-        [{"payload": b} for b in payload_by_cell.values()], index_res)
-    return PackFileHandle(spark, pack)
+
+    if collect:
+        payload_by_cell = {}
+        for table in rounds:
+            payload_by_cell.update(zip(table.column("cell").to_pylist(),
+                                       table.column("payload").to_pylist()))
+        return [{"payload": b} for b in payload_by_cell.values()]
+    kept = [blobs.filter(F.col("cell").isin(
+                [c for c, r in owner.items() if r == i]))
+            for i, blobs in enumerate(rounds) if i in owner.values()]
+    return functools.reduce(DataFrame.unionByName, kept)
+
+
+def build_broadcast_pack(spark: SparkSession, points: DataFrame,
+                         cell_res: int = 4, index_res: int = 9,
+                         halo_m: float | None = None,
+                         id_col: str = "point_id", certify: bool = True):
+    """points -> certified blobs -> merged pack -> PackFileHandle.
+
+    The pack is always certified (see certified_blobs); ``certify`` is
+    accepted only as ``True``, for callers written when it was optional.
+    """
+    if certify is not True:
+        raise ValueError(
+            "build_broadcast_pack always certifies its triangles; "
+            f"certify={certify!r} is not supported")
+    rows = certified_blobs(spark, points, cell_res, index_res, halo_m,
+                           id_col)
+    return PackFileHandle(spark, merge_pack_blobs(rows, index_res))
+
+
+def _schema_names(schema: str) -> list[str]:
+    return [f.split()[0] for f in schema.split(", ")]
+
+
+def _explode_blobs(blobs: DataFrame, schema: str) -> DataFrame:
+    """One row per element of the blob shard fields named in ``schema``
+    (its column names are shard keys). Vectorized: one unpickle per
+    blob and one Arrow batch out per Arrow batch in."""
+    names = _schema_names(schema)
+
+    def explode(batches):
+        import pickle
+
+        import numpy as _np
+        import pyarrow as pa
+
+        for batch in batches:
+            shards = [pickle.loads(b)
+                      for b in batch.column("payload").to_pylist()]
+            if shards:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(_np.concatenate([s[c] for s in shards]))
+                     for c in names], names=names)
+
+    return blobs.select("payload").mapInArrow(explode, schema)
+
+
+def triangles_from_blobs(blobs: DataFrame) -> DataFrame:
+    """Certified blob rows -> TRI_SCHEMA rows (the shuffle plan's
+    triangle table), without collecting anything to the driver.
+
+    The payloads' triangles (tri_id + three global point ids) gather
+    their vertices' coordinates and TPU with a Spark join on point id
+    against the payloads' owned points — the same arrays
+    merge_pack_blobs packs for the broadcast plan."""
+    tris = _explode_blobs(blobs, TRI_ID_SCHEMA)
+    pts = _explode_blobs(blobs, _SHARD_POINT_SCHEMA)
+    for k in (1, 2, 3):
+        tris = tris.join(pts.select(
+            F.col("pid").alias(f"v{k}"),
+            *[F.col(f"p{c}").alias(f"{c}{k}") for c in ("x", "y", "z")],
+            *[F.col(f"p_{t}").alias(f"{t}_{k}") for t in TPU_COLS],
+        ), f"v{k}")
+    return tris.select(*_schema_names(TRI_SCHEMA))
 
 
 def pack_triangle_index_normalized(tri_tbl, pts_tbl, index_res: int,
                                    id_col: str = "point_id") -> dict:
-    """Broadcast pack from (tri_id, v1..v3) + the points table.
-
-    ~3x smaller than the denormalized pack: the driver ships point
-    coordinates/TPU once plus int32 vertex indices, and the probe
-    gathers per batch (two fancy-index hops, vectorized)."""
+    """Driver-side pack from a (tri_id, v1..v3) table + the points
+    table: the single-process twin of merge_pack_blobs (same layout),
+    for packing a triangulation that did not come from the blob kernel.
+    Points' coordinates/TPU are stored once plus int32 vertex indices,
+    and the probe gathers per batch (two fancy-index hops)."""
 
     def _np_cols(tbl, names, dtypes):
         if isinstance(tbl, pd.DataFrame):
@@ -1042,8 +1014,8 @@ def index_triangles(triangles: DataFrame, index_res: int) -> DataFrame:
     """Explode each triangle to the fine Z-order cells its bbox covers.
 
     Pure JVM (explode(sequence(...)) twice) — the Raptor-style equi-join
-    index for the shuffle path. The broadcast path computes the same
-    mapping driver-side in pack_triangle_index instead.
+    index for the shuffle plan. The broadcast plan's covering pairs come
+    from the same bbox math, run inside the blob kernel.
     """
     nf = 1 << index_res
     fs = _EXT / nf
@@ -1071,7 +1043,7 @@ def index_triangles(triangles: DataFrame, index_res: int) -> DataFrame:
 
 def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
                  centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
-                 broadcast_triangles: bool = True) -> DataFrame:
+                 ) -> DataFrame:
     """Per-doc TIN interpolation + E3 variance — pure Catalyst exprs.
 
     docs_geo needs (doc_id, x, y). Returns doc_id, zp, var_zp (docs whose
@@ -1101,8 +1073,7 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
         triangles.select("tri_id", "x1", "y1", "x2", "y2", "x3", "y3"),
         index_res,
     )
-    t = F.broadcast(narrow) if broadcast_triangles else narrow
-    j = d.join(t, "icell")
+    j = d.join(narrow, "icell")
 
     # barycentric containment (boundary-inclusive, CCW triangles) —
     # the ONE edge-sign template (pip.edge_sign), not a byte-for-byte
@@ -1127,8 +1098,7 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
         )
     )
 
-    full = F.broadcast(triangles) if broadcast_triangles else triangles
-    j = hits.join(full, "tri_id")
+    j = hits.join(triangles, "tri_id")
 
     cx, cy, cz = centroid
     v = {}
@@ -1154,70 +1124,6 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
     )
 
 
-# ---------------------------------------------------------------------------
-# Broadcast-index path (the BASELINE.json architecture: "broadcast R-tree +
-# prepared-geometry point-in-polygon"): the triangle table is collected
-# once, packed into flat NumPy arrays with a CSR-style cell index, and
-# broadcast; documents stream through mapInPandas with NO shuffle — each
-# Arrow batch probes the worker-local index, runs the barycentric refine
-# and the vectorized E3 quadratic form, and emits (doc_id, zp, var_zp).
-# One Python call per ~64k-doc batch; per-doc cost is pure NumPy.
-# ---------------------------------------------------------------------------
-
-
-
-def pack_triangle_index(full_tbl, index_res: int) -> dict:
-    """CSR cell index (int32 indirection) + unique-triangle payload.
-
-    ``full_tbl``: one row per triangle (tri_id + 9 vertex + 18 tpu cols),
-    as a pandas DataFrame OR a pyarrow Table (from DataFrame.toArrow(),
-    which skips the pandas conversion on the driver). The fine-cell
-    covering (bbox) is computed HERE, vectorized on the driver — the
-    executors never ship exploded index rows.
-    """
-    nf = 1 << index_res
-    fs = _EXT / nf
-    if not isinstance(full_tbl, pd.DataFrame):
-        cols = {
-            name: full_tbl.column(name).to_numpy(zero_copy_only=False)
-            for name in full_tbl.column_names
-        }
-        t = pd.DataFrame(cols)
-    else:
-        t = full_tbl
-    order = np.argsort(t["tri_id"].to_numpy(np.int64), kind="stable")
-    t = t.iloc[order].reset_index(drop=True)
-    vx = t[["x1", "x2", "x3"]].to_numpy(np.float64)
-    vy = t[["y1", "y2", "y3"]].to_numpy(np.float64)
-    ix_lo = np.clip(((vx.min(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    ix_hi = np.clip(((vx.max(1) - _X0) / fs).astype(np.int64), 0, nf - 1)
-    iy_lo = np.clip(((vy.min(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    iy_hi = np.clip(((vy.max(1) - _Y0) / fs).astype(np.int64), 0, nf - 1)
-    nx = ix_hi - ix_lo + 1
-    ny = iy_hi - iy_lo + 1
-    reps = nx * ny
-    total = int(reps.sum())
-    rows = np.repeat(np.arange(len(t), dtype=np.int32), reps)
-    # per-pair offset within its triangle's bbox window (vectorized)
-    base = np.concatenate([[0], np.cumsum(reps)[:-1]])
-    within = np.arange(total) - np.repeat(base, reps)
-    wx = within % np.repeat(nx, reps)
-    wy = within // np.repeat(nx, reps)
-    icell = (np.repeat(iy_lo, reps) + wy) * nf + (np.repeat(ix_lo, reps) + wx)
-    order = np.argsort(icell, kind="stable")
-    icell = icell[order]
-    rows = rows[order]
-    counts = np.bincount(icell, minlength=nf * nf)
-    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    pack = {"offsets": offsets, "cell_tri": rows, "nf": nf}
-    for c in ("x1", "y1", "z1", "x2", "y2", "z2", "x3", "y3", "z3"):
-        pack[c] = t[c].to_numpy(np.float64)
-    for k in (1, 2, 3):
-        for tc in TPU_COLS:
-            pack[f"{tc}_{k}"] = t[f"{tc}_{k}"].to_numpy(np.float64)
-    return pack
-
-
 # Cache-blocking for the probe kernel: at Arrow's 65536-row batches
 # every intermediate array (~3.4 candidates/point x 8 B x dozens of
 # temporaries in the geometry/Jacobian chain) is ~1.8 MB — past L2, so
@@ -1234,12 +1140,9 @@ _PROBE_ARGTYPES = None
 
 
 def _probe_c(idx: dict, x: np.ndarray, y: np.ndarray, centroid: tuple):
-    """C probe for normalized packs (functions/_probe_core.c): exact
-    expression-order port — bit-identical to _probe_batch_core, pinned
-    by tests/test_probe_c.py. Returns None when the core is
-    unavailable or the pack is not the normalized layout."""
-    if not idx.get("normalized"):
-        return None
+    """C probe (functions/_probe_core.c): exact expression-order port —
+    bit-identical to _probe_batch_core, pinned by tests/test_probe_c.py.
+    Returns None when the core is unavailable."""
     import ctypes
     from pathlib import Path
 
@@ -1352,21 +1255,11 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     # one (m,3) vertex-id gather, shared with the E3 loop below (it was
     # re-gathered 3x per chunk — wasted DRAM traffic in the kernel the
     # PROBE_CHUNK cache blocking exists to keep bandwidth-lean)
-    tvs = idx["tv"][s] if idx.get("normalized") else None
-    if idx.get("normalized"):
-        for k in (1, 2, 3):
-            vk = tvs[:, k - 1]
-            v[f"x{k}"] = idx[f"x{k}"][s] - cx
-            v[f"y{k}"] = idx[f"y{k}"][s] - cy
-            v[f"z{k}"] = idx["pz"][vk] - cz
-    else:
-        for k, (xc, yc, zc) in enumerate(
-            (("x1", "y1", "z1"), ("x2", "y2", "z2"), ("x3", "y3", "z3")),
-            start=1,
-        ):
-            v[f"x{k}"] = idx[xc][s] - cx
-            v[f"y{k}"] = idx[yc][s] - cy
-            v[f"z{k}"] = idx[zc][s] - cz
+    tvs = idx["tv"][s]
+    for k in (1, 2, 3):
+        v[f"x{k}"] = idx[f"x{k}"][s] - cx
+        v[f"y{k}"] = idx[f"y{k}"][s] - cy
+        v[f"z{k}"] = idx["pz"][tvs[:, k - 1]] - cz
     xp = x[found] - cx
     yp = y[found] - cy
     x1, y1, z1 = v["x1"], v["y1"], v["z1"]
@@ -1395,11 +1288,8 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     acc = np.zeros(found.sum())
     for k in range(3):
         dx, dy, dz = dmat[3 * k], dmat[3 * k + 1], dmat[3 * k + 2]
-        if idx.get("normalized"):
-            vk = tvs[:, k]
-            tp = {t: idx[f"p_{t}"][vk] for t in TPU_COLS}
-        else:
-            tp = {t: idx[f"{t}_{k + 1}"][s] for t in TPU_COLS}
+        vk = tvs[:, k]
+        tp = {t: idx[f"p_{t}"][vk] for t in TPU_COLS}
         acc += (dx * dx * tp["var_x"]
                 + dy * dy * tp["var_y"]
                 + dz * dz * tp["var_z"]
@@ -1410,23 +1300,11 @@ def _probe_batch_core(idx: dict, x: np.ndarray, y: np.ndarray,
     return zp, var, found
 
 
-def propagate_at_broadcast(spark: SparkSession, docs_geo: DataFrame,
-                           triangles: DataFrame, index_res: int = 7,
-                           centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
-                           ) -> DataFrame:
-    """Shuffle-free doc-side propagation via a broadcast triangle index.
-
-    Semantics match propagate_at (docs outside every triangle dropped).
-    """
-    pack = pack_triangle_index(triangles.toArrow(), index_res)
-    bc = spark.sparkContext.broadcast(pack)
-    return probe_docs(docs_geo, bc, centroid)
-
-
 def probe_docs(docs_geo: DataFrame, bc,
                centroid: tuple[float, float, float]) -> DataFrame:
     """mapInPandas containment+E3 probe of (doc_id, x, y) rows against a
-    broadcast pack (from merge_pack_blobs or pack_triangle_index*)."""
+    pack handle (a PackFileHandle over merge_pack_blobs' pack). Docs
+    outside every triangle are dropped, as in propagate_at."""
     cen = tuple(centroid)
 
     def probe(batches):
@@ -1447,33 +1325,62 @@ def probe_docs(docs_geo: DataFrame, bc,
     return docs_geo.mapInPandas(probe, "doc_id long, zp double, var_zp double")
 
 
-# rough bytes/point of the merged normalized pack: 10 point doubles +
-# ~2 triangles/point x (12B tv + 32B dense xy) + ~3.4 covering pairs/tri
-# x 4B cell_tri + offsets; measured 90 MB at 400k points => ~225 B/pt.
+# rough bytes/point of the merged pack: 10 point doubles + ~2
+# triangles/point x (12B tv + 48B containment xy) + ~3.4 covering
+# pairs/tri x 4B cell_tri + offsets; measured 90 MB at 400k points
+# => ~225 B/pt.
 PACK_BYTES_PER_POINT = 240
+BROADCAST_BUDGET_BYTES = 1 << 30
+
+
+def choose_plan(blobs: DataFrame,
+                budget_bytes: int = BROADCAST_BUDGET_BYTES) -> str:
+    """The doc probe's physical-plan switch: 'broadcast' when the merged
+    pack of these certified blobs (point count read off their counter
+    column x PACK_BYTES_PER_POINT) fits ``budget_bytes``, else
+    'shuffle'."""
+    n_pts = blobs.agg(F.sum("n_pts")).first()[0] or 0
+    if n_pts * PACK_BYTES_PER_POINT <= budget_bytes:
+        return "broadcast"
+    return "shuffle"
+
+
+def propagate_plan(spark: SparkSession, docs_geo: DataFrame,
+                   blobs: DataFrame, plan: str, index_res: int = 9,
+                   centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
+                   ) -> DataFrame:
+    """Probe (doc_id, x, y) docs against certified blobs with the plan
+    choose_plan picked -> (doc_id, zp, var_zp), docs outside every
+    triangle dropped.
+
+    broadcast: merge_pack_blobs -> PackFileHandle -> shuffle-free
+    mapInPandas probe. shuffle: triangles_from_blobs -> propagate_at;
+    the triangle table stays distributed, so no node ever holds the
+    whole TIN. Both read the same triangles and pick the same one on
+    shared edges (the lowest tri_id), so they give the same answer.
+    """
+    if plan == "broadcast":
+        pack = merge_pack_blobs(blobs.select("payload").toArrow(),
+                                index_res)
+        return probe_docs(docs_geo, PackFileHandle(spark, pack), centroid)
+    if plan == "shuffle":
+        return propagate_at(docs_geo, triangles_from_blobs(blobs), index_res,
+                            centroid)
+    raise ValueError(f"unknown plan {plan!r}")
 
 
 def propagate_auto(spark: SparkSession, docs_geo: DataFrame,
                    points: DataFrame, cell_res: int = 4, index_res: int = 9,
                    halo_m: float | None = None, id_col: str = "point_id",
                    centroid: tuple[float, float, float] = (0.0, 0.0, 0.0),
-                   broadcast_budget_bytes: int = 1 << 30,
+                   broadcast_budget_bytes: int = BROADCAST_BUDGET_BYTES,
                    ) -> tuple[DataFrame, str]:
-    """Size-based physical-plan switch (VERDICT r1 'What's wrong' #1).
-
-    Small TIN (est. pack <= budget): distributed blob pack -> broadcast
-    -> shuffle-free mapInPandas probe. Large TIN: triangle table stays
-    distributed and docs equi-join it on the fine cell (propagate_at,
-    shuffle path) — no single node ever holds the whole TIN.
+    """points + docs -> certified blobs -> choose_plan -> propagate_plan.
 
     Returns (result_df, 'broadcast'|'shuffle').
     """
-    n_pts = points.count()
-    if n_pts * PACK_BYTES_PER_POINT <= broadcast_budget_bytes:
-        bc = build_broadcast_pack(spark, points, cell_res, index_res,
-                                  halo_m, id_col)
-        return probe_docs(docs_geo, bc, centroid), "broadcast"
-    tris = build_triangles(spark, points, cell_res, halo_m)
-    out = propagate_at(docs_geo, tris, index_res, centroid,
-                       broadcast_triangles=False)
-    return out, "shuffle"
+    blobs = certified_blobs(spark, points, cell_res, index_res, halo_m,
+                            id_col, collect=False)
+    plan = choose_plan(blobs, broadcast_budget_bytes)
+    return propagate_plan(spark, docs_geo, blobs, plan, index_res,
+                          centroid), plan

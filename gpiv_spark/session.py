@@ -23,12 +23,29 @@ from pyspark.sql import SparkSession
 _WORKERENV = str(Path(__file__).resolve().parent / "workerenv")
 
 
+def default_driver_mem() -> str:
+    """Driver heap: $SPARK_GRAFT_DRIVER_MEM, else 16g capped at half of
+    the host's physical memory. The heap is pinned (-Xms), so a default
+    above what the host has gets the JVM OOM-killed."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mb = 16 << 10
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        mb = min(mb, total // 2 >> 20)
+    except (ValueError, OSError):
+        pass
+    return f"{mb}m"
+
+
 def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = 2 * cpus
+    driver_mem = default_driver_mem()
     # preserve any caller-provided worker PYTHONPATH entries
     worker_pp = os.pathsep.join(
         p for p in (os.environ.get("SPARK_GRAFT_WORKER_PYTHONPATH", ""),
@@ -60,12 +77,12 @@ def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
         # bounded by maxRecordsPerBatch above.
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str((1 << 31) - 1))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Pinned heap + ParallelGC: G1's periodic uncommit (madvise ->
         # TLB-shootdown IPIs) burned 5x more kernel than user CPU on this
         # virtualized 32-core box and inverted thread scaling.
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} -XX:+UseParallelGC")
+                f"-Xms{driver_mem} -XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

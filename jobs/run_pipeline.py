@@ -31,8 +31,8 @@ def main() -> None:
                          "(uncompressed 1.2-1.4, TPU extra-byte dims) "
                          "instead of synthesizing --points")
     ap.add_argument("--broadcast-budget-mb", type=int, default=1024,
-                    help="max broadcast TIN index size; larger TINs take "
-                         "the shuffle equi-join path")
+                    help="max broadcast TIN pack size; larger TINs take "
+                         "the shuffle equi-join plan (tin.choose_plan)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -44,16 +44,14 @@ def main() -> None:
     from gpiv_spark.dialect import SPARK as d
     from gpiv_spark.functions import geocode
     from gpiv_spark.operators.tin import (
-        PACK_BYTES_PER_POINT,
-        build_pack_blobs,
-        build_triangles,
-        merge_pack_blobs,
-        probe_docs,
-        propagate_at,
+        certified_blobs,
+        choose_plan,
+        propagate_plan,
     )
     from gpiv_spark.plans import lineage
 
-    fp = (f"las={args.las}-v1" if args.las else f"points={args.points}-v1")
+    # -v2: the blob stage holds certified blobs (v1 checkpoints did not)
+    fp = (f"las={args.las}-v2" if args.las else f"points={args.points}-v2")
 
     def build_points():
         if args.las:
@@ -83,45 +81,18 @@ def main() -> None:
             F.lit(0.0).alias("cov_yz"),
         )
 
-    # size-based physical-plan switch, shared with propagate_auto
-    # (operators/tin.py): point count is known from the arguments, so
-    # the branch is decided before any job runs. Small TIN -> the
-    # DISTRIBUTED per-cell pack build (workers do Delaunay + pack their
-    # shard; the driver only concatenates — never a toArrow() of the
-    # triangle table). Large TIN -> the triangle table stays distributed
-    # and docs equi-join it on the fine cell.
-    if args.las:
-        # estimate the point count from file metadata only (no scan):
-        # format-0 record + 6 double extra dims = 68 bytes/point
-        est_bytes = (
-            spark.read.format("binaryFile").load(args.las)
-            .agg(F.sum("length")).collect()[0][0] or 0
-        )
-        n_pts_est = est_bytes // 68
-    else:
-        n_pts_est = args.points
-    use_broadcast = (
-        n_pts_est * PACK_BYTES_PER_POINT
-        <= args.broadcast_budget_mb * (1 << 20)
-    )
-
     t0 = time.time()
-    if use_broadcast:
-        # checkpoint the expensive stage (per-cell Delaunay + pack
-        # shards) as the tiny blob table — resumable like any stage
-        blobs, resumed_t = lineage.resume_or_run(
-            spark, args.checkpoint, "pack_blobs",
-            lambda: build_pack_blobs(spark, build_points(), cell_res=4,
-                                     index_res=9, halo_m=6.0, id_col="pid"),
-            fp,
-        )
-    else:
-        tris, resumed_t = lineage.resume_or_run(
-            spark, args.checkpoint, "triangles",
-            lambda: build_triangles(spark, build_points(), cell_res=4,
-                                    halo_m=6.0),
-            fp,
-        )
+    # checkpoint the expensive stage (per-cell Delaunay, certificate
+    # repair, pack shards) as the tiny certified blob table — resumable
+    # like any stage, and the input of both doc-probe plans
+    blobs, resumed_t = lineage.resume_or_run(
+        spark, args.checkpoint, "pack_blobs",
+        lambda: certified_blobs(spark, build_points(), cell_res=4,
+                                index_res=9, halo_m=6.0, id_col="pid",
+                                collect=False),
+        fp,
+    )
+    plan = choose_plan(blobs, args.broadcast_budget_mb << 20)
 
     if args.sf_dir:
         # parquet dir (testdata) or Iceberg catalog namespace — see
@@ -140,28 +111,18 @@ def main() -> None:
             F.expr(geocode.y_expr(d, "id")).alias("y"),
         )
 
-    # docs source identity + physical path in the fingerprint: switching
-    # --sf-dir (or synthetic<->sf-dir mode, or the broadcast/shuffle
-    # branch via --broadcast-budget-mb) must invalidate the checkpoint.
-    # The propagation construction lives inside the lambda so a resume
-    # skips the pack merge / triangle scan entirely.
-    mode = "bcast" if use_broadcast else "shuffle"
-    docs_fp = (args.sf_dir if args.sf_dir else f"docs={args.docs}") + f"-{mode}"
+    # docs source identity + physical plan in the fingerprint: switching
+    # --sf-dir (or synthetic<->sf-dir mode, or the plan via
+    # --broadcast-budget-mb) must invalidate the checkpoint. The
+    # propagation construction lives inside the lambda so a resume
+    # skips the pack merge / triangle join entirely.
+    docs_fp = (args.sf_dir if args.sf_dir else f"docs={args.docs}") + f"-{plan}"
     cen = (geocode.X0 + 239.0, geocode.Y0 + 239.0, 7.0)
-
-    def build_propagated():
-        if use_broadcast:
-            # driver work = shard concatenation only (merge_pack_blobs);
-            # the blob table is ~64 rows, one per coarse cell
-            pack = merge_pack_blobs(blobs.toArrow(), index_res=9)
-            bc = spark.sparkContext.broadcast(pack)
-            return probe_docs(docs, bc, cen)
-        return propagate_at(docs, tris, index_res=9, centroid=cen,
-                            broadcast_triangles=False)
 
     out, resumed_p = lineage.resume_or_run(
         spark, args.checkpoint, "propagated",
-        build_propagated,
+        lambda: propagate_plan(spark, docs, blobs, plan, index_res=9,
+                               centroid=cen),
         f"{fp}-{docs_fp}",
     )
     row = out.agg(
@@ -171,9 +132,8 @@ def main() -> None:
     print(json.dumps({
         "n_docs_out": row["n"],
         "mean_var": row["mean_var"],
-        "mode": mode,
-        "resumed": {("pack_blobs" if use_broadcast else "triangles"): resumed_t,
-                    "propagated": resumed_p},
+        "mode": plan,
+        "resumed": {"pack_blobs": resumed_t, "propagated": resumed_p},
         "wall_sec": round(wall, 2),
         "docs_per_sec": round(row["n"] / wall) if wall > 0 else None,
     }))

@@ -10,6 +10,8 @@ reference-semantics oracle (spatial-domain NCC + numeric-diff
 Jacobians — none of the engine's FFT/analytic code paths).
 """
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -20,6 +22,8 @@ from gpiv_spark.sources.geotiff import read_geotiff
 from gpiv_spark.sources.raster import array_to_df, validate_geo_sidecars
 
 DATA = "/root/reference/data/output"
+pytestmark = pytest.mark.skipif(not Path(DATA).is_dir(),
+                                reason="reference rasters absent")
 CFG = PivConfig()  # reference config: template=100, step=50, scale=2
 
 

@@ -107,7 +107,7 @@ def test_multi_strip_ragged_no_geo():
 
 
 @pytest.mark.skipif(not REF_TIFS, reason="reference rasters absent")
-@pytest.mark.parametrize("src", REF_TIFS, ids=lambda p: p.stem)
+@pytest.mark.parametrize("src", REF_TIFS, ids=[p.stem for p in REF_TIFS])
 def test_reference_raster_reencodes_identically(src):
     """read -> write -> read of the reference's own bundled rasters
     preserves every pixel and the transform/nodata tags."""

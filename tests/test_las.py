@@ -66,7 +66,7 @@ def test_las_path_matches_parquet_path_bit_for_bit(spark, tmp_path, cloud):
     the LAS reader is a pure IO swap, not a semantic one."""
     import pyspark.sql.functions as F
 
-    from gpiv_spark.operators.tin import build_triangles, propagate_at
+    from gpiv_spark.operators.tin import propagate_auto
     from gpiv_spark.functions.geocode import X0, Y0
 
     (tmp_path / "pts.las").write_bytes(_blob(cloud))
@@ -82,12 +82,11 @@ def test_las_path_matches_parquet_path_bit_for_bit(spark, tmp_path, cloud):
     cen = (X0 + 239.0, Y0 + 239.0, 7.0)
 
     def run(points):
-        tris = build_triangles(spark, points.drop("point_id"),
-                               cell_res=3, halo_m=8.0)
-        return (
-            propagate_at(docs, tris, index_res=8, centroid=cen)
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
+        out, plan = propagate_auto(spark, docs, points, cell_res=3,
+                                   index_res=8, halo_m=8.0, centroid=cen,
+                                   broadcast_budget_bytes=0)
+        assert plan == "shuffle"
+        return out.toPandas().sort_values("doc_id").reset_index(drop=True)
 
     a, b = run(las_df), run(pq_df)
     las_df.unpersist()

@@ -103,20 +103,26 @@ def test_knn_is_shuffle_free(spark):
 def test_propagate_probe_is_narrow(spark):
     """Semi-join reduction: the containment probe must not carry the
     18 TPU columns; they join only after the per-doc winner is picked."""
-    from gpiv_spark.operators.tin import build_triangles, propagate_at
+    from gpiv_spark.operators.tin import (
+        certified_blobs,
+        propagate_at,
+        triangles_from_blobs,
+    )
 
     pts = spark.range(2000).select(F.col("id").alias("pid"))
     px = geocode.xq_expr(d, "pid")
     py = geocode.yq_expr(d, "pid")
     points = pts.select(
-        F.expr(px).alias("x"), F.expr(py).alias("y"),
+        "pid", F.expr(px).alias("x"), F.expr(py).alias("y"),
         F.lit(1.0).alias("z"),
         F.lit(0.1).alias("var_x"), F.lit(0.1).alias("var_y"),
         F.lit(0.1).alias("var_z"),
         F.lit(0.0).alias("cov_xy"), F.lit(0.0).alias("cov_xz"),
         F.lit(0.0).alias("cov_yz"),
     )
-    tris = build_triangles(spark, points, cell_res=3, halo_m=12.0)
+    tris = triangles_from_blobs(certified_blobs(
+        spark, points, cell_res=3, index_res=7, halo_m=12.0, id_col="pid",
+        collect=False))
     docs = spark.range(1000).select(
         F.col("id").alias("doc_id"),
         F.expr(geocode.x_expr(d, "id")).alias("x"),

@@ -3,9 +3,9 @@
 The per-cell kernel certifies each OWNED triangle by checking that its
 circumcircle — clamped to the data bbox, where points can exist — fits
 inside the cell+halo region the kernel actually saw (operators/tin.py,
-_cell_blob). build_broadcast_pack(certify=True) then retries failed
-cells with doubled halos until every owned triangle certifies, which is
-what makes a density-adaptive halo SAFE: certified triangles are
+_make_cell_blob_kernel). certified_blobs then retries failed cells with
+wider halos until every owned triangle certifies, which is what makes a
+density-adaptive halo SAFE: certified triangles are
 provably in the global Delaunay no matter how small the starting halo
 was (soundness); only the thin band between local and global convex
 hulls is not claimed (F4 hull probes there return NULL either way).
@@ -13,9 +13,11 @@ hulls is not claimed (F4 hull probes there return NULL either way).
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from gpiv_spark.functions import delaunay as dl
 from gpiv_spark.functions import geocode
+from gpiv_spark.operators import tin
 from gpiv_spark.operators.tin import _EXT, _X0, _Y0, build_broadcast_pack
 
 TPU_DEFAULTS = {
@@ -24,7 +26,7 @@ TPU_DEFAULTS = {
 }
 
 
-def _cloud_df(spark, n, seed=11, stray=False):
+def _cloud_pdf(n, seed=11, stray=False):
     import pandas as pd
 
     rng = np.random.default_rng(seed)
@@ -38,6 +40,11 @@ def _cloud_df(spark, n, seed=11, stray=False):
         pdf[c] = v
     if stray:
         pdf.loc[0, "x"] = _X0 - 25.0  # outside the nominal extent
+    return pdf
+
+
+def _cloud_df(spark, n, seed=11, stray=False):
+    pdf = _cloud_pdf(n, seed, stray)
     return pdf, spark.createDataFrame(pdf)
 
 
@@ -72,17 +79,51 @@ def test_certified_pack_is_sound_subset_of_global(spark, halo):
         f"hull-band completeness gap too large: {len(missing)}")
 
 
-def test_uncertified_small_halo_emits_rogue_triangles(spark):
-    """Control for the test above: WITHOUT certification the same
-    undersized halo produces triangles that are not in the global
-    Delaunay — the certificate is what's doing the work."""
-    pdf, points = _cloud_df(spark, 4000, seed=7)
-    bc = build_broadcast_pack(spark, points, cell_res=4, index_res=8,
-                              halo_m=0.1, id_col="pid", certify=False)
-    pack = bc.value
-    bc.destroy()
-    got = _pack_triples(pack, np.sort(pdf["pid"].to_numpy(np.int64)))
-    assert got - _global_triples(pdf), "expected rogue triangles at halo=0.1"
+def _kernel_blobs(pdf, cell_res, halo):
+    """Run the per-cell blob kernel in-process on every cell's fan-in
+    (the cell's points plus every point within ``halo`` of it) -> one
+    (cell, n_uncert, owned pid triples) row per populated cell."""
+    import pickle
+
+    n = 1 << cell_res
+    csize = _EXT / n
+    kernel = tin._make_cell_blob_kernel(n, csize, 256, _EXT / 256, halo,
+                                        halo, "pid")
+    x, y = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+    out = []
+    for cell in range(n * n):
+        cx, cy = cell % n, cell // n
+        sel = ((x >= _X0 + cx * csize - halo) & (x < _X0 + (cx + 1) * csize + halo)
+               & (y >= _Y0 + cy * csize - halo) & (y < _Y0 + (cy + 1) * csize + halo))
+        if not sel.any():
+            continue
+        row = kernel((cell,), pdf[sel].reset_index(drop=True)).iloc[0]
+        shard = pickle.loads(row["payload"])
+        triples = {tuple(sorted(t)) for t in zip(
+            shard["v1"].tolist(), shard["v2"].tolist(), shard["v3"].tolist())}
+        out.append((cell, int(row["n_uncert"]), triples))
+    return out
+
+
+def test_uncertified_small_halo_emits_rogue_triangles():
+    """Control for the test above, at the kernel level: at an undersized
+    halo the per-cell Delaunay emits triangles that are not in the
+    global Delaunay, and the kernel's n_uncert flags every one of them
+    — the certificate is what's doing the work."""
+    pdf = _cloud_pdf(4000, seed=7)
+    want = _global_triples(pdf)
+    n_rogue = 0
+    for cell, n_uncert, triples in _kernel_blobs(pdf, cell_res=4, halo=0.1):
+        rogue = len(triples - want)
+        assert rogue <= n_uncert, f"cell {cell}: {rogue} rogue, {n_uncert} flagged"
+        n_rogue += rogue
+    assert n_rogue, "expected rogue triangles at halo=0.1"
+
+
+def test_build_broadcast_pack_only_certifies(spark):
+    _, points = _cloud_df(spark, 50, seed=3)
+    with pytest.raises(ValueError, match="always certifies"):
+        build_broadcast_pack(spark, points, certify=False)
 
 
 def test_stray_points_void_bbox_clamp(spark):
@@ -124,4 +165,64 @@ def test_certified_build_total_on_clustered_cloud(spark):
     got = _pack_triples(pack, np.sort(pdf["pid"].to_numpy(np.int64)))
     want = _global_triples(pdf)
     assert not (got - want), "rogue triangles on clustered cloud"
+    assert len(want - got) < 0.01 * len(want)
+
+
+def test_in_ring_repairs_hand_their_halo_need_to_the_targeted_retry(
+        spark, monkeypatch):
+    """Uniform cloud with an empty disc: the small starting halo fails
+    cells everywhere (the in-ring doublings fix those), while triangles
+    spanning the disc need a halo beyond the 8-ring's reach. The ladder
+    must then make ONE wide-reach retry, sized from the need the LAST
+    in-ring round reported (not the first pass's stale one), and emit
+    only globally-Delaunay triangles."""
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    p = np.stack([_X0 + rng.random(20_000) * _EXT,
+                  _Y0 + rng.random(20_000) * _EXT], axis=1)
+    p = p[np.hypot(p[:, 0] - (_X0 + 0.47 * _EXT),
+                   p[:, 1] - (_Y0 + 0.53 * _EXT)) > 45.0]
+    pdf = pd.DataFrame({"pid": np.arange(len(p), dtype=np.int64),
+                        "x": p[:, 0], "y": p[:, 1],
+                        "z": rng.random(len(p))})
+    for c, v in TPU_DEFAULTS.items():
+        pdf[c] = v
+    points = spark.createDataFrame(pdf)
+
+    rounds, wide = [], []
+    ring, at_cells = tin.build_pack_blobs, tin.build_pack_blobs_at_cells
+
+    def spy_ring(*a, **k):
+        blobs = ring(*a, **k)
+        rounds.append(blobs)
+        return blobs
+
+    def spy_wide(spark_, points_, cells, cell_res, index_res, halo_m, *a):
+        wide.append((len(cells), halo_m))
+        return at_cells(spark_, points_, cells, cell_res, index_res,
+                        halo_m, *a)
+
+    monkeypatch.setattr(tin, "build_pack_blobs", spy_ring)
+    monkeypatch.setattr(tin, "build_pack_blobs_at_cells", spy_wide)
+    bc = build_broadcast_pack(spark, points, cell_res=5, index_res=8,
+                              halo_m=1.0, id_col="pid")
+    pack = bc.value
+    bc.destroy()
+
+    def reported_need(blobs):
+        return blobs.agg(F.max("halo_need")).first()[0]
+
+    def targeted_halo(need):
+        # the in-ring ladder stops at halo csize; the retry takes the
+        # reported need (+2%), at least doubled, at most the extent
+        return min(max(1.02 * need, 2.0 * _EXT / 32), _EXT)
+
+    assert len(rounds) >= 2, "the in-ring ladder never ran"
+    assert len(wide) == 1, f"expected one wide-reach retry, got {wide}"
+    assert wide[0][1] == targeted_halo(reported_need(rounds[-1]))
+    assert wide[0][1] != targeted_halo(reported_need(rounds[0]))
+    got = _pack_triples(pack, np.sort(pdf["pid"].to_numpy(np.int64)))
+    want = _global_triples(pdf)
+    assert not (got - want), "rogue triangles after the targeted retry"
     assert len(want - got) < 0.01 * len(want)

@@ -1,5 +1,6 @@
-"""The two doc-scale TIN paths (shuffle equi+refine join, broadcast
-index probe) must agree with each other and interpolate planes exactly."""
+"""The two doc-probe plans over the certified blobs (shuffle equi+refine
+join, broadcast pack probe) must agree with each other, interpolate
+planes exactly, and pack exactly what a driver-side packer would."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -7,22 +8,24 @@ import pytest
 
 from gpiv_spark.dialect import SPARK as d
 from gpiv_spark.functions import geocode
+from gpiv_spark.operators import tin
 from gpiv_spark.operators.tin import (
-    build_triangles,
+    certified_blobs,
+    merge_pack_blobs,
     propagate_at,
-    propagate_at_broadcast,
+    triangles_from_blobs,
 )
 
 X0, Y0 = geocode.X0, geocode.Y0
 CEN = (X0 + 239.0, Y0 + 239.0, 7.0)
 
 
-@pytest.fixture(scope="module")
-def tris(spark):
-    pts = spark.range(20_000).select(F.col("id").alias("pid"))
+def _point_df(spark, n):
+    pts = spark.range(n).select(F.col("id").alias("pid"))
     px = geocode.xq_expr(d, "pid")
     py = geocode.yq_expr(d, "pid")
-    points = pts.select(
+    return pts.select(
+        F.col("pid"),
         F.expr(px).alias("x"),
         F.expr(py).alias("y"),
         F.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
@@ -33,7 +36,18 @@ def tris(spark):
         F.lit(0.0).alias("cov_xz"),
         F.lit(0.0).alias("cov_yz"),
     )
-    t = build_triangles(spark, points, cell_res=3, halo_m=8.0).cache()
+
+
+@pytest.fixture(scope="module")
+def blobs(spark):
+    return certified_blobs(spark, _point_df(spark, 20_000), cell_res=3,
+                           index_res=8, halo_m=8.0, id_col="pid",
+                           collect=False)
+
+
+@pytest.fixture(scope="module")
+def tris(blobs):
+    t = triangles_from_blobs(blobs).cache()
     t.count()
     yield t
     t.unpersist()
@@ -51,7 +65,6 @@ def docs(spark):
 def test_shuffle_path_plane_exact(spark, tris, docs):
     res = propagate_at(docs, tris, index_res=8, centroid=CEN).toPandas()
     assert len(res) > 4900  # nearly all docs inside the hull
-    expected = 0.01 * (res["zp"] * 0)  # placeholder shape
     dgeo = docs.toPandas().set_index("doc_id")
     exp = 0.01 * (dgeo.loc[res["doc_id"], "x"].to_numpy() - X0) - 0.02 * (
         dgeo.loc[res["doc_id"], "y"].to_numpy() - Y0
@@ -60,112 +73,55 @@ def test_shuffle_path_plane_exact(spark, tris, docs):
     assert (res["var_zp"] > 0).all()
 
 
-def test_broadcast_path_matches_shuffle_path(spark, tris, docs):
+def test_broadcast_path_matches_shuffle_path(spark, blobs, tris, docs):
+    """Same certified triangles, same shared-edge pick (lowest tri_id):
+    the two plans find the same docs and agree to rounding."""
     a = (
         propagate_at(docs, tris, index_res=8, centroid=CEN)
         .toPandas().set_index("doc_id").sort_index()
     )
+    handle = tin.PackFileHandle(spark, merge_pack_blobs(blobs.toArrow(), 8))
     b = (
-        propagate_at_broadcast(spark, docs, tris, index_res=8, centroid=CEN)
+        tin.probe_docs(docs, handle, CEN)
         .toPandas().set_index("doc_id").sort_index()
     )
-    assert len(a) == len(b)
-    np.testing.assert_allclose(a["zp"], b["zp"], atol=1e-9)
-    # var depends on WHICH triangle is picked on shared edges; interior
-    # docs pick identically, tolerate a tiny disagreement fraction
-    close = np.isclose(a["var_zp"], b["var_zp"], rtol=1e-6)
-    assert close.mean() > 0.999
+    handle.destroy()
+    assert a.index.equals(b.index)
+    np.testing.assert_allclose(a["zp"], b["zp"], rtol=1e-9)
+    np.testing.assert_allclose(a["var_zp"], b["var_zp"], rtol=1e-9)
 
 
-def test_normalized_pack_matches_dense_pack(spark, tris, docs):
-    """The (points + vertex-index) pack must produce identical results
-    to the denormalized per-triangle pack."""
-    import pandas as pd
-    import pyspark.sql.functions as FF
+def test_triangles_from_blobs_match_payloads(blobs, tris):
+    """Every certified triangle becomes exactly one TRI_SCHEMA row whose
+    vertex columns are its payload points' values."""
+    pack = merge_pack_blobs(blobs.toArrow(), 8)
+    t = tris.toPandas().sort_values("tri_id").reset_index(drop=True)
+    assert list(t.columns) == tin._schema_names(tin.TRI_SCHEMA)
+    assert len(t) == len(pack["tv"]) == t["tri_id"].nunique()
+    for k in (1, 2, 3):
+        rows = pack["tv"][:, k - 1]
+        np.testing.assert_array_equal(t[f"x{k}"], pack["px"][rows])
+        np.testing.assert_array_equal(t[f"y{k}"], pack["py"][rows])
+        np.testing.assert_array_equal(t[f"z{k}"], pack["pz"][rows])
+        np.testing.assert_array_equal(t[f"var_y_{k}"], pack["p_var_y"][rows])
 
+
+def test_blob_pack_identical_to_driver_pack(spark, blobs, docs):
+    """The distributed per-cell blob merge must reproduce the
+    driver-side packer EXACTLY on the same certified triangles — same
+    arrays, same probe output."""
     from gpiv_spark.operators.tin import (
+        TRI_ID_SCHEMA,
+        _explode_blobs,
         _probe_batch,
-        build_triangle_ids,
-        pack_triangle_index,
-        pack_triangle_index_normalized,
-    )
-
-    pts = spark.range(20_000).select(FF.col("id").alias("pid"))
-    px = geocode.xq_expr(d, "pid")
-    py = geocode.yq_expr(d, "pid")
-    points = pts.select(
-        FF.col("pid"),
-        FF.expr(px).alias("x"),
-        FF.expr(py).alias("y"),
-        FF.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
-        FF.expr("(1 + pid % 7) * 0.0001").alias("var_x"),
-        FF.expr("(1 + pid % 5) * 0.0001").alias("var_y"),
-        FF.expr("(1 + pid % 3) * 0.0001").alias("var_z"),
-        FF.lit(0.0).alias("cov_xy"),
-        FF.lit(0.0).alias("cov_xz"),
-        FF.lit(0.0).alias("cov_yz"),
-    )
-    tri_ids = build_triangle_ids(spark, points, cell_res=3, halo_m=8.0,
-                                 id_col="pid")
-    pack_n = pack_triangle_index_normalized(
-        tri_ids.toPandas(), points.toPandas(), index_res=8, id_col="pid"
-    )
-    pack_d = pack_triangle_index(tris.toPandas(), index_res=8)
-
-    dpdf = docs.toPandas()
-    xv = dpdf["x"].to_numpy()
-    yv = dpdf["y"].to_numpy()
-    zp_n, var_n, f_n = _probe_batch(pack_n, xv, yv, CEN)
-    zp_d, var_d, f_d = _probe_batch(pack_d, xv, yv, CEN)
-    # both triangulations come from the same points (possibly different
-    # insertion partitioning at different cell_res), so compare on the
-    # plane-exact zp where both found
-    both = f_n & f_d
-    assert both.mean() > 0.97
-    np.testing.assert_allclose(zp_n[both], zp_d[both], atol=1e-7)
-    assert (var_n[both] > 0).all()
-
-
-def _point_df(spark, n):
-    import pyspark.sql.functions as FF
-
-    pts = spark.range(n).select(FF.col("id").alias("pid"))
-    px = geocode.xq_expr(d, "pid")
-    py = geocode.yq_expr(d, "pid")
-    return pts.select(
-        FF.col("pid"),
-        FF.expr(px).alias("x"),
-        FF.expr(py).alias("y"),
-        FF.expr(f"0.01 * ({px} - {X0!r}) - 0.02 * ({py} - {Y0!r}) + 5.0").alias("z"),
-        FF.expr("(1 + pid % 7) * 0.0001").alias("var_x"),
-        FF.expr("(1 + pid % 5) * 0.0001").alias("var_y"),
-        FF.expr("(1 + pid % 3) * 0.0001").alias("var_z"),
-        FF.lit(0.0).alias("cov_xy"),
-        FF.lit(0.0).alias("cov_xz"),
-        FF.lit(0.0).alias("cov_yz"),
-    )
-
-
-def test_blob_pack_identical_to_driver_pack(spark, docs):
-    """The distributed per-cell blob pack must reproduce the old
-    driver-side pack EXACTLY — same arrays, same probe output — so the
-    round-2 build-path change is a pure physical-plan swap."""
-    from gpiv_spark.operators.tin import (
-        _probe_batch,
-        build_pack_blobs,
-        build_triangle_ids,
-        merge_pack_blobs,
         pack_triangle_index_normalized,
     )
 
     points = _point_df(spark, 20_000)
-    tri_ids = build_triangle_ids(spark, points, cell_res=3, halo_m=8.0,
-                                 id_col="pid")
     pack_old = pack_triangle_index_normalized(
-        tri_ids.toPandas(), points.toPandas(), index_res=8, id_col="pid"
+        _explode_blobs(blobs, TRI_ID_SCHEMA).toPandas(), points.toPandas(),
+        index_res=8, id_col="pid",
     )
-    blobs = build_pack_blobs(spark, points, cell_res=3, index_res=8,
-                             halo_m=8.0, id_col="pid")
     pack_new = merge_pack_blobs(blobs.toArrow(), index_res=8)
 
     for key in ("px", "py", "pz", "offsets", "cell_tri", "tv",
@@ -181,10 +137,32 @@ def test_blob_pack_identical_to_driver_pack(spark, docs):
     np.testing.assert_array_equal(vo, vn)
 
 
+def test_pack_cache_evicts_destroyed_packs(spark, monkeypatch):
+    """A reused worker never sees the driver's destroy(): its next pack
+    load must evict the destroyed pack's mmap views, so destroy() plus a
+    rebuild does not grow the per-process cache."""
+    monkeypatch.setattr(tin, "_PACK_CACHE", {})
+    pack = {"nf": 2, "px": np.arange(5.0), "tv": np.zeros((1, 3), np.int32)}
+    first = tin.PackFileHandle(spark, pack)
+    worker_view = first.value
+    # what a reused worker still holds after the driver destroys `first`
+    first.destroy()
+    tin._PACK_CACHE[first._dir] = worker_view
+
+    second = tin.PackFileHandle(spark, pack)
+    np.testing.assert_array_equal(second.value["px"], pack["px"])
+    assert list(tin._PACK_CACHE) == [second._dir]
+    second.value  # a hit keeps the entry and adds none
+    assert list(tin._PACK_CACHE) == [second._dir]
+    second.destroy()
+    assert not tin._PACK_CACHE
+
+
 def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
-    """The spark-submit entry ships the size-switched physical plan:
-    broadcast branch = distributed pack blobs (checkpointed, no triangle
-    toArrow), shuffle branch = distributed equi-join; both resumable."""
+    """The spark-submit entry checkpoints the certified blob table once,
+    then runs the plan tin.choose_plan picks: broadcast = merged pack
+    probe, shuffle = distributed equi-join; both resumable, both giving
+    the same answer."""
     import json
     import sys as _sys
 
@@ -202,7 +180,7 @@ def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
     ck = str(tmp_path / "ckpt")
     base = ["--docs", "20000", "--points", "4000", "--checkpoint", ck]
     r1 = run(base)
-    assert r1["mode"] == "bcast"
+    assert r1["mode"] == "broadcast"
     assert r1["resumed"] == {"pack_blobs": False, "propagated": False}
     assert (tmp_path / "ckpt" / "pack_blobs" / "data").exists()
     assert r1["n_docs_out"] > 0.9 * 20000  # hull-edge docs drop (4k-pt TIN)
@@ -212,11 +190,12 @@ def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
     assert r2["n_docs_out"] == r1["n_docs_out"]
     assert r2["mean_var"] == r1["mean_var"]
 
-    r3 = run(base + ["--broadcast-budget-mb", "0"])  # forced shuffle path
+    r3 = run(base + ["--broadcast-budget-mb", "0"])  # forced shuffle plan
     assert r3["mode"] == "shuffle"
-    assert r3["resumed"] == {"triangles": False, "propagated": False}
+    # the blob stage is plan-independent; only the probe stage re-runs
+    assert r3["resumed"] == {"pack_blobs": True, "propagated": False}
     assert r3["n_docs_out"] == r1["n_docs_out"]
-    np.testing.assert_allclose(r3["mean_var"], r1["mean_var"], rtol=1e-6)
+    np.testing.assert_allclose(r3["mean_var"], r1["mean_var"], rtol=1e-9)
 
     # LAS-sourced points through the same entry (S1 on the real format)
     from gpiv_spark import fixtures
@@ -240,13 +219,13 @@ def test_run_pipeline_entry_switch(spark, monkeypatch, tmp_path, capsys):
     )
     r4 = run(["--docs", "20000", "--checkpoint", str(tmp_path / "ck2"),
               "--las", str(tmp_path / "pts.las")])
-    assert r4["mode"] == "bcast"
+    assert r4["mode"] == "broadcast"
     assert r4["n_docs_out"] > 0.9 * 20000
 
 
 def test_propagate_auto_switches_paths(spark, docs):
     """Budget above/below the estimated pack size selects broadcast vs
-    shuffle, and both agree on the interpolated plane."""
+    shuffle, and both give the same answer."""
     from gpiv_spark.operators.tin import propagate_auto
 
     points = _point_df(spark, 20_000)
@@ -259,5 +238,6 @@ def test_propagate_auto_switches_paths(spark, docs):
     assert mode_b == "shuffle"
     pa = a.toPandas().set_index("doc_id").sort_index()
     pb = b.toPandas().set_index("doc_id").sort_index()
-    assert len(pa) == len(pb) and len(pa) > 4900
-    np.testing.assert_allclose(pa["zp"], pb["zp"], atol=1e-9)
+    assert pa.index.equals(pb.index) and len(pa) > 4900
+    np.testing.assert_allclose(pa["zp"], pb["zp"], rtol=1e-9)
+    np.testing.assert_allclose(pa["var_zp"], pb["var_zp"], rtol=1e-9)
