@@ -94,25 +94,34 @@ def fan_out_points(spark: SparkSession, points: DataFrame, cell_res: int,
     neigh = spark.createDataFrame(
         [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)], "dr int, dc int"
     )
+
+    # double literals: a bare 29.875 parses as DECIMAL, which made every
+    # row and neighbour run cast(cast(_ix as decimal(20,0)) * 29.875 as
+    # double). csize = 478 / 2^k and _ix < 2^k, so the double product is
+    # exact and the offsets (hence the pack) stay bit-identical.
+    def lit(v: float) -> str:
+        return f"{float(v)!r}D"
+
+    x0, y0, ext, cs = lit(_X0), lit(_Y0), lit(_EXT), lit(csize)
     # offset of the point inside its home cell, in metres
-    fx = f"((x - {_X0!r}) - _ix * {csize!r})"
-    fy = f"((y - {_Y0!r}) - _iy * {csize!r})"
+    fx = f"((x - {x0}) - _ix * {cs})"
+    fy = f"((y - {y0}) - _iy * {cs})"
     # halo of the TARGET cell (_ix+dc, _iy+dr): extent-boundary cells
     # use the wider edge margin
     h = (f"(CASE WHEN (_ix + dc) IN (0, {n - 1})"
          f" OR (_iy + dr) IN (0, {n - 1})"
-         f" THEN {edge_halo_m!r} ELSE {halo_m!r} END)")
+         f" THEN {lit(edge_halo_m)} ELSE {lit(halo_m)} END)")
     keep = (
         f"(dc = 0 OR (dc = -1 AND {fx} < {h})"
-        f" OR (dc = 1 AND {csize!r} - {fx} < {h}))"
+        f" OR (dc = 1 AND {cs} - {fx} < {h}))"
         f" AND (dr = 0 OR (dr = -1 AND {fy} < {h})"
-        f" OR (dr = 1 AND {csize!r} - {fy} < {h}))"
+        f" OR (dr = 1 AND {cs} - {fy} < {h}))"
     )
     return (
         points.withColumn("_ix", F.expr(
-            f"greatest(0, least({n - 1}, CAST(floor((x - {_X0!r}) / {_EXT!r} * {n}) AS BIGINT)))"))
+            f"greatest(0, least({n - 1}, CAST(floor((x - {x0}) / {ext} * {n}) AS BIGINT)))"))
         .withColumn("_iy", F.expr(
-            f"greatest(0, least({n - 1}, CAST(floor((y - {_Y0!r}) / {_EXT!r} * {n}) AS BIGINT)))"))
+            f"greatest(0, least({n - 1}, CAST(floor((y - {y0}) / {ext} * {n}) AS BIGINT)))"))
         .crossJoin(F.broadcast(neigh))
         .filter(F.expr(keep))
         .withColumn("_jx", F.col("_ix") + F.col("dc"))
@@ -1124,11 +1133,13 @@ def propagate_at(docs_geo: DataFrame, triangles: DataFrame, index_res: int = 7,
     )
 
 
-# Cache-blocking for the probe kernel: at Arrow's 65536-row batches
-# every intermediate array (~3.4 candidates/point x 8 B x dozens of
-# temporaries in the geometry/Jacobian chain) is ~1.8 MB — past L2, so
-# each numpy op round-trips DRAM, and 32 concurrent workers saturate
-# memory bandwidth. Measured on this box (pinned multiprocessing,
+# Cache-blocking for the NumPy fallback probe only (_probe_batch_core,
+# used when the C core cannot build; the C probe keeps its state in
+# registers and orders each call's docs by cell itself): at Arrow's
+# 65536-row batches every intermediate array (~3.4 candidates/point x
+# 8 B x dozens of temporaries in the geometry/Jacobian chain) is
+# ~1.8 MB — past L2, so each numpy op round-trips DRAM, and 32
+# concurrent workers saturate memory bandwidth. Measured on this box (pinned multiprocessing,
 # 2 waves/level, best-of-2): 8->32 weak-scaling efficiency 0.67 at
 # 65536-row chunks vs 0.78-0.82 at 2-8k chunks, with 32-way absolute
 # throughput +25%; single-threaded the 4k chunk is also ~24% faster.
@@ -1142,7 +1153,12 @@ _PROBE_ARGTYPES = None
 def _probe_c(idx: dict, x: np.ndarray, y: np.ndarray, centroid: tuple):
     """C probe (functions/_probe_core.c): exact expression-order port —
     bit-identical to _probe_batch_core, pinned by tests/test_probe_c.py.
-    Returns None when the core is unavailable."""
+
+    The kernel visits the docs in Morton order of their fine cell (an
+    in-C radix sort of the doc indices) and writes each result to the
+    doc's own slot, so docs sharing a cell read the same pack rows back
+    to back. Per-doc results depend only on the doc, so the order leaves
+    them bit-identical. Returns None when the core is unavailable."""
     import ctypes
     from pathlib import Path
 
@@ -1156,7 +1172,7 @@ def _probe_c(idx: dict, x: np.ndarray, y: np.ndarray, centroid: tuple):
     fn = lib.gpiv_probe_batch
     if _PROBE_ARGTYPES is None:
         V, D, I = ctypes.c_void_p, ctypes.c_double, ctypes.c_int64
-        fn.restype = None
+        fn.restype = ctypes.c_int64
         fn.argtypes = ([V, V, I, D, D, D, I] + [V] * 16
                        + [D, D, D] + [V] * 3)
         _PROBE_ARGTYPES = fn.argtypes
@@ -1171,16 +1187,18 @@ def _probe_c(idx: dict, x: np.ndarray, y: np.ndarray, centroid: tuple):
     x = np.ascontiguousarray(x, dtype=np.float64)
     y = np.ascontiguousarray(y, dtype=np.float64)
     cx, cy, cz = centroid
-    fn(p(x), p(y), ctypes.c_int64(n),
-       ctypes.c_double(_X0), ctypes.c_double(_Y0), ctypes.c_double(_EXT),
-       ctypes.c_int64(idx["nf"]),
-       p(idx["offsets"]), p(idx["cell_tri"]), p(idx["tv"]),
-       p(idx["x1"]), p(idx["y1"]), p(idx["x2"]), p(idx["y2"]),
-       p(idx["x3"]), p(idx["y3"]), p(idx["pz"]),
-       p(idx["p_var_x"]), p(idx["p_var_y"]), p(idx["p_var_z"]),
-       p(idx["p_cov_xy"]), p(idx["p_cov_xz"]), p(idx["p_cov_yz"]),
-       ctypes.c_double(cx), ctypes.c_double(cy), ctypes.c_double(cz),
-       p(zp), p(var), p(found))
+    rc = fn(p(x), p(y), ctypes.c_int64(n),
+            ctypes.c_double(_X0), ctypes.c_double(_Y0), ctypes.c_double(_EXT),
+            ctypes.c_int64(idx["nf"]),
+            p(idx["offsets"]), p(idx["cell_tri"]), p(idx["tv"]),
+            p(idx["x1"]), p(idx["y1"]), p(idx["x2"]), p(idx["y2"]),
+            p(idx["x3"]), p(idx["y3"]), p(idx["pz"]),
+            p(idx["p_var_x"]), p(idx["p_var_y"]), p(idx["p_var_z"]),
+            p(idx["p_cov_xy"]), p(idx["p_cov_xz"]), p(idx["p_cov_yz"]),
+            ctypes.c_double(cx), ctypes.c_double(cy), ctypes.c_double(cz),
+            p(zp), p(var), p(found))
+    if rc != 0:
+        raise MemoryError("C probe: sort scratch allocation failed")
     return zp, var, found.astype(bool)
 
 

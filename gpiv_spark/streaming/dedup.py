@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gpiv_spark.streaming.stateful import event_ms, interval_ms
+
 OUT_SCHEMA = "first_doc long, n_docs long, len_chars long"
 STATE_SCHEMA = ("first_doc long, first_ms long, last_ms long, "
                 "n_docs long, len_chars long")
@@ -54,7 +56,7 @@ def _make_dedup_fn(horizon_ms: int, key_by_text: bool):
         batches = list(pdfs)
         rows = (batches[0] if len(batches) == 1
                 else pd.concat(batches, ignore_index=True))
-        ms = rows["ts"].to_numpy().view("int64") // 1_000_000
+        ms = event_ms(rows)
         docs = rows["doc_id"].to_numpy()
         # batch winner: min (event_ms, doc_id) — arrival order within or
         # across microbatches must not matter
@@ -97,8 +99,6 @@ def stream_dedup_first(docs: DataFrame, horizon: str = "1 hour",
     and state keys (see module docstring); only doc_id and ts reach the
     stateful operator, the text never leaves the map side."""
     from pyspark.sql import functions as F
-
-    from gpiv_spark.streaming.stateful import interval_ms
 
     horizon_ms = interval_ms(horizon)
     wm = docs.withWatermark("ts", watermark)

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -45,6 +46,22 @@ OUT_SCHEMA = ("user_id long, start_ms long, n_events long, "
               "total_value double")
 STATE_SCHEMA = ("starts array<long>, lasts array<long>, ns array<long>, "
                 "tots array<double>")
+
+
+_TS_NS = np.dtype("datetime64[ns]")
+
+
+def event_ms(rows: pd.DataFrame, col: str = "ts") -> np.ndarray:
+    """Epoch milliseconds of an event-time column, through a zero-copy
+    int64 view. Only a tz-naive datetime64[ns] column has that layout: a
+    tz-aware one comes back as Timestamp objects and another unit would
+    scale wrongly, so both fail loudly here instead of yielding garbage.
+    Shared by every streaming operator."""
+    ts = rows[col]
+    if ts.dtype != _TS_NS:
+        raise TypeError(f"event-time column {col!r} must be tz-naive "
+                        f"datetime64[ns], got {ts.dtype}")
+    return ts.to_numpy().view("int64") // 1_000_000
 
 
 def interval_ms(interval: str) -> int:
@@ -120,7 +137,7 @@ def _make_session_fn(gap_ms: int):
         # ~100 us per call, which dominates at 1e6 single-pdf keys
         batches = list(pdfs)
         for rows in batches:
-            ms = rows["ts"].to_numpy().view("int64") // 1_000_000
+            ms = event_ms(rows)
             vals = rows["value"].to_numpy()
             clusters.extend([int(t), int(t), 1, float(v)]
                             for t, v in zip(ms, vals))

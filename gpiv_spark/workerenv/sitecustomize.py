@@ -24,6 +24,12 @@ for changed archives are identical to stock 3.11.
 
 Measured effect (8 pinned cores, no-op mapInPandas stage, best of 3):
 128 tasks 2.55 s -> 1.08 s; 256 tasks 4.94 s -> 2.03 s.
+
+Being named ``sitecustomize``, this module hides any sitecustomize
+further down the worker's sys.path (a venv's, conda's or the distro's).
+After installing the guard it therefore finds the next one, skipping
+its own directory, and runs it, so that environment's start-up hooks
+still apply.
 """
 
 import os
@@ -47,3 +53,23 @@ def _guarded_invalidate(self):
 
 
 zipimport.zipimporter.invalidate_caches = _guarded_invalidate
+
+
+def _chain_shadowed() -> None:
+    """Run the next ``sitecustomize`` on sys.path after this directory,
+    if there is one. Searching only later entries means two such
+    chaining modules on one path cannot call each other in a loop."""
+    import importlib.machinery
+    import importlib.util
+    import sys
+
+    here = os.path.realpath(os.path.dirname(__file__))
+    real = [os.path.realpath(p or os.curdir) for p in sys.path]
+    start = real.index(here) + 1 if here in real else 0
+    path = [p for p, r in zip(sys.path[start:], real[start:]) if r != here]
+    spec = importlib.machinery.PathFinder.find_spec("sitecustomize", path)
+    if spec is not None and spec.loader is not None:
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+
+_chain_shadowed()

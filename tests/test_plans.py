@@ -279,3 +279,20 @@ def test_sample_stratified_two_phase_windows(spark):
     assert n_windows >= 2, plan
     # the salted phase-1 partitioning appears (doc_id % 16)
     assert "% 16" in plan, plan
+
+
+def test_fan_out_points_runs_no_decimal_arithmetic(spark):
+    """fan_out_points' cell-offset and halo literals are doubles: a bare
+    29.875 parses as DECIMAL and turned every row x neighbour into
+    cast(cast(_ix as decimal(20,0)) * 29.875 as double)."""
+    from gpiv_spark.operators import tin
+
+    cols = ["x", "y", "z", *tin.TPU_COLS]
+    pts = spark.createDataFrame(
+        [(geocode.X0 + 100.0, geocode.Y0 + 200.0) + (0.0,) * (len(cols) - 2)],
+        ", ".join(f"{c} double" for c in cols))
+    df = tin.fan_out_points(spark, pts, 4, 3.7, edge_halo_m=7.25)
+    qe = df._jdf.queryExecution()
+    for plan in (qe.analyzed(), qe.optimizedPlan()):
+        text = plan.toString()
+        assert "29.875" in text and "decimal" not in text.lower(), text

@@ -164,3 +164,28 @@ def test_stream_sessions_out_of_order_batches(spark):
     assert sorted(
         (int(u), int(s)) for u, s in zip(got["user_id"], got["start_ms"])
     ) == sorted(exp_starts)
+
+
+def test_tz_aware_event_time_is_rejected():
+    """Both stateful operators read ts through a zero-copy int64 view,
+    which is only right for tz-naive datetime64[ns]; a tz-aware column
+    must raise a TypeError naming the column, not yield garbage."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from gpiv_spark.streaming.dedup import _make_dedup_fn
+    from gpiv_spark.streaming.stateful import _make_session_fn, event_ms
+
+    ts = pd.Series(pd.to_datetime([1_700_000_000_000, 1_700_000_060_000],
+                                  unit="ms"))
+    naive = pd.DataFrame({"ts": ts, "value": [1.0, 2.0], "doc_id": [1, 2]})
+    assert event_ms(naive).tolist() == [1_700_000_000_000, 1_700_000_060_000]
+
+    aware = naive.assign(ts=ts.dt.tz_localize("UTC"))
+    state = SimpleNamespace(hasTimedOut=False, exists=False,
+                            getCurrentWatermarkMs=lambda: 0)
+    for fn, key in ((_make_session_fn(60_000), (7,)),
+                    (_make_dedup_fn(60_000, False), (123, 4))):
+        with pytest.raises(TypeError, match="'ts'.*datetime64"):
+            list(fn(key, iter([aware]), state))

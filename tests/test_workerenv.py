@@ -68,3 +68,28 @@ def test_guard_reloads_on_archive_change(tmp_path):
         assert len(calls) == 2
     finally:
         sc._orig_invalidate = orig
+
+
+def test_shadowed_sitecustomize_still_runs(tmp_path):
+    """The guard shadows any sitecustomize later on PYTHONPATH; it must
+    chain to it, so an environment's own start-up hooks still run."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    workerenv = Path(__file__).resolve().parents[1] / "gpiv_spark" / "workerenv"
+    other = tmp_path / "other"
+    other.mkdir()
+    (other / "sitecustomize.py").write_text(
+        "import builtins\nbuiltins._shadowed_sitecustomize_ran = True\n")
+    env = dict(os.environ,
+               PYTHONPATH=os.pathsep.join([str(workerenv), str(other)]))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import builtins, zipimport\n"
+         "print(zipimport.zipimporter.invalidate_caches.__name__)\n"
+         "print(getattr(builtins, '_shadowed_sitecustomize_ran', False))"],
+        env=env, capture_output=True, text=True, timeout=60, check=True,
+    )
+    assert out.stdout.split() == ["_guarded_invalidate", "True"], out
