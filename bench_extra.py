@@ -1,10 +1,9 @@
-"""Round-6 auxiliary benchmarks (bench.py is FROZEN for measurement).
+"""Auxiliary benchmarks, one mode per run, one JSON line each.
 
 Modes:
   python bench_extra.py queries [names...]   noop-sink timing + explain
       capture for the bench query subset -> plans/r06/<name>_{when}.txt
       (set PLANS_WHEN=before|after; default after)
-  python bench_extra.py build CPUS NPTS      certified pack-build wall
   python bench_extra.py tin_shuffle          large-TIN shuffle plan
       (tin.propagate_plan 'shuffle') timing + Exchange count
       (VERDICT r5 #4)
@@ -24,38 +23,23 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-BENCH_QUERIES = [
-    "cells_zorder", "tile_assign", "pip_triangles", "pip_cells",
-    "knn_anchors", "minhash_sig", "simhash", "ngram_jaccard",
-    "embed_topk", "cosine_neardup_lsh", "piv_kernel", "piv_covariance",
-    "tin_plane_kernel",
-]
+from bench import BENCH_QUERIES, SF_DIR, warm_queries  # noqa: E402
 
 
 def _spark():
     from gpiv_spark.session import get_spark
 
-    return get_spark("bench-extra", cpus=CPUS, shuffle_partitions=2 * CPUS)
+    return get_spark("bench-extra")
 
 
 def run_queries(names: list[str]) -> None:
-    import __spark_entry__ as entry
-    from gpiv_spark.queries import RETIRED
+    from gpiv_spark.session import default_cpus
 
     when = os.environ.get("PLANS_WHEN", "after")
     out_dir = Path(__file__).resolve().parent / "plans" / "r06"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = _spark()
-    qs = dict(entry.queries())
-    qs.update({name: q.spark for name, q in RETIRED.items()})
-    # warm engine like bench.py does
-    spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(1000).mapInPandas(
-        lambda it: it, "doc_id long, text string, lang string, "
-        "source string, n_chars long"
-    ).groupBy("lang").count().collect()
+    qs = warm_queries(spark)
     res = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
@@ -73,7 +57,7 @@ def run_queries(names: list[str]) -> None:
         print(f"[noop] {name}: {res[name]}s", file=sys.stderr)
     spark.sparkContext.setJobDescription(None)
     print(json.dumps({"mode": "queries", "noop_best3": res,
-                      "sf": SF_DIR, "cpus": CPUS,
+                      "sf": SF_DIR, "cpus": default_cpus(),
                       "loadavg": os.getloadavg()[0]}))
     spark.stop()
 
@@ -84,16 +68,15 @@ def run_tin_shuffle() -> None:
     the plan a 100-TB cloud takes (tin.choose_plan picks it)."""
     from pyspark.sql import functions as F
 
-    import bench
+    from gpiv_spark.dialect import SPARK as d
+    from gpiv_spark.functions import geocode
     from gpiv_spark.operators.tin import certified_blobs, propagate_plan
+    from perfbench.engine import points_df, tin_halo
 
     n_points = int(os.environ.get("TIN_SHUFFLE_POINTS", "4200000"))
     n_docs = int(os.environ.get("TIN_SHUFFLE_DOCS", "20000000"))
     spark = _spark()
-    pts = bench.bench_points(spark, n_points)
-    from gpiv_spark.dialect import SPARK as d
-    from gpiv_spark.functions import geocode
-
+    pts = points_df(spark, n_points, 0)
     docs = spark.range(0, n_docs, 1, 64).select(F.col("id").alias("doc_id"))
     geo = docs.select(
         "doc_id",
@@ -101,7 +84,7 @@ def run_tin_shuffle() -> None:
         F.expr(geocode.y_expr(d, "doc_id")).alias("y"),
     )
     cen = (geocode.X0 + 239.0, geocode.Y0 + 239.0, 7.0)
-    halo = min(6.0, max(1.0, 6.0 * geocode.EXTENT / n_points ** 0.5))
+    halo = tin_halo(n_points)
     t0 = time.time()
     blobs = certified_blobs(spark, pts, cell_res=4, index_res=9,
                             halo_m=halo, id_col="pid", collect=False)

@@ -1,18 +1,26 @@
 """Point-in-polygon spatial join (SURVEY §2.3 J2 generalization).
 
-Engine strategy (the Raptor/VLDB'19-style equi+refine pattern):
-1. encode points to Z-order/hex cells (gpiv_spark.functions.cells);
-2. polygons are rasterized to covering cells (driver-side for the
-   small broadcast ROI set; distributed explode for big sets);
-3. equi-join on cell_id — broadcast when the polygon side is small —
-   then an exact geometric refine;
-4. LEFT join keeps "outside every polygon" rows as NULL roi_id,
-   mirroring find_simplex == -1 -> NaN (tin_interpolation.py:76-83).
+What callers build today: a broadcast nested-loop LEFT join of the
+points against the small ROI triangle set (``roi_triangles``), with
+``inside_triangle_pred`` as the join condition —
 
-The refine for convex rings (triangles here — GPIV's TIN case) is the
-half-plane sign test, pure column arithmetic in both dialects. The
-general concave-ring crossing-number test lives in the vectorized
-NumPy kernel (used by applyInPandas paths); same semantics.
+    geo.alias("g").join(F.broadcast(roi.alias("r")),
+                        F.expr(inside_triangle_pred("g.x", "g.y", ...)),
+                        "left")
+
+Spark plans it as a BroadcastNestedLoopJoin: every point is refined
+against every triangle. The predicate is the half-plane sign test for
+CCW triangles (GPIV's TIN case), boundary-inclusive, pure column
+arithmetic rendered to both dialects, so the DuckDB oracle
+(``roi_values_sql``) shares its math. LEFT semantics keep "outside
+every triangle" rows with a NULL roi_id, mirroring find_simplex == -1
+-> NaN (tin_interpolation.py:76-83); a point on a shared edge matches
+once per triangle that contains it. The general concave-ring
+crossing-number test is ``numpy_point_in_ring``, for pandas-UDF kernels.
+
+Not built yet (ROADMAP direction 6): the Raptor-style equi-join that
+keys points and triangles to covering cells and refines only within a
+cell.
 """
 
 from __future__ import annotations

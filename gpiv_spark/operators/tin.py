@@ -486,8 +486,7 @@ def build_pack_blobs(spark: SparkSession, points: DataFrame,
     triangle's fine-cell bbox covering pairs. The driver's only job is
     concatenation + two O(n log n) sorts (merge_pack_blobs) — no
     toArrow() of the full triangle/point tables, no single-threaded
-    covering computation (kills the round-1 scale/Amdahl bottleneck
-    flagged at tin.py:722/bench.py:68).
+    covering computation (kills the round-1 scale/Amdahl bottleneck).
     """
     n = 1 << cell_res
     nf = 1 << index_res

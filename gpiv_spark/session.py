@@ -39,10 +39,19 @@ def default_driver_mem() -> str:
     return f"{mb}m"
 
 
+def default_cpus() -> int:
+    """Local cores: $SPARK_GRAFT_CPUS, else the size of this process's
+    CPU affinity mask (the cores it may actually run on)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = 2 * cpus
     driver_mem = default_driver_mem()

@@ -1,9 +1,9 @@
 """User-facing CLI mirroring the reference's command surface (gpiv.py:11-60).
 
     python jobs/gpiv_cli.py piv BEFORE.tif AFTER.tif TEMPLATE STEP \
-        [--prop BU.tif AU.tif] [--outname NAME] [--scale 2] [--cpus 8]
+        [--prop BU.tif AU.tif] [--outname NAME] [--scale 2] [--cpus N]
     python jobs/gpiv_cli.py dem POINTS OUT_DEM.tif OUT_TPU.tif \
-        [--pixel 1.0] [--epsg 6344] [--cpus 8]
+        [--pixel 1.0] [--epsg 6344] [--cpus N]
     python jobs/gpiv_cli.py pivshow BACKGROUND.tif [--vec vectors.json]
         [--ell covariances.json] [--vecscale S] [--ellscale S] [--out f.png]
 
@@ -264,7 +264,9 @@ def main() -> None:
     p.add_argument("--outname", type=str, default=None)
     p.add_argument("--scale", type=int, default=2,
                    help="search scale (reference hardcodes 2)")
-    p.add_argument("--cpus", type=int, default=8)
+    p.add_argument("--cpus", type=int, default=None,
+                   help="local cores (default: $SPARK_GRAFT_CPUS, else "
+                        "the cores this process may run on)")
     p.set_defaults(fn=cmd_piv)
 
     g = sub.add_parser(
@@ -275,7 +277,9 @@ def main() -> None:
     g.add_argument("out_tpu")
     g.add_argument("--pixel", type=float, default=1.0)
     g.add_argument("--epsg", type=int, default=6344)
-    g.add_argument("--cpus", type=int, default=8)
+    g.add_argument("--cpus", type=int, default=None,
+                   help="local cores (default: $SPARK_GRAFT_CPUS, else "
+                        "the cores this process may run on)")
     g.set_defaults(fn=cmd_dem)
 
     s = sub.add_parser("pivshow", help="render vectors/ellipses over a DEM")

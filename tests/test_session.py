@@ -1,10 +1,10 @@
-"""The driver heap is pinned (-Xms), so its default must fit the host:
-min(16g, half the physical memory), with SPARK_GRAFT_DRIVER_MEM
-overriding it."""
+"""Session defaults must fit the host. The driver heap is pinned (-Xms):
+min(16g, half the physical memory), SPARK_GRAFT_DRIVER_MEM overriding
+it. Local cores: the affinity mask, SPARK_GRAFT_CPUS overriding it."""
 
 import os
 
-from gpiv_spark.session import default_driver_mem
+from gpiv_spark.session import default_cpus, default_driver_mem
 
 
 def test_default_driver_mem_fits_host(monkeypatch):
@@ -18,3 +18,13 @@ def test_default_driver_mem_fits_host(monkeypatch):
 def test_env_overrides_driver_mem(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_mem() == "3g"
+
+
+def test_default_cpus_is_affinity_size(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+
+
+def test_env_overrides_cpus(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
