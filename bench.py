@@ -79,32 +79,37 @@ def efficiency(lo_rates: list[float], hi_rates: list[float]) -> float:
     return statistics.median(hi_rates) / (4 * lo) if lo else 0.0
 
 
-def child_argv(workload: str, seed: int) -> list[str]:
-    return [sys.executable, str(ROOT / "perfbench" / "run.py"),
+def child_argv(workload: str, seed: int, root: Path = ROOT) -> list[str]:
+    return [sys.executable, str(root / "perfbench" / "run.py"),
             "--workload", workload, "--seed", str(seed),
             "--seconds", str(SECONDS), "--trace", "0"]
 
 
-def run_child(workload: str, seed: int, cores: list[int]) -> dict:
-    """One untraced perfbench run pinned to `cores`:
-    {"items_per_s", "correct"} off its last stdout line."""
+def run_child(workload: str, seed: int, cores: list[int] | None = None,
+              root: Path = ROOT) -> dict:
+    """One untraced perfbench run in the checkout `root`, pinned to
+    `cores` (None: this process's affinity): {"metrics": {name: value},
+    "correct"} off its last stdout line; no metrics if it crashed."""
     t0 = time.time()
+    pin = None if cores is None else (
+        lambda: os.sched_setaffinity(0, set(cores)))
     out = subprocess.run(
-        child_argv(workload, seed), cwd=ROOT, capture_output=True,
-        text=True, check=False,
-        preexec_fn=lambda: os.sched_setaffinity(0, set(cores)),
+        child_argv(workload, seed, root), cwd=root, capture_output=True,
+        text=True, check=False, preexec_fn=pin,
     )
     try:
         res = json.loads(out.stdout.strip().splitlines()[-1])
-        rate = res["metrics"]["items_per_s"]["value"]
+        metrics = {k: m["value"] for k, m in res["metrics"].items()}
         ok = bool(res["correct"]) and out.returncode == 0
     except (IndexError, KeyError, json.JSONDecodeError):
-        rate, ok = 0.0, False
-    print(f"[bench] {workload} seed {seed} on {len(cores)} cores: "
-          f"{rate:,.0f} items/s in {time.time() - t0:.0f}s" + (
+        metrics, ok = {}, False
+    where = f"{len(cores)} cores" if cores is not None else str(root)
+    print(f"[bench] {workload} seed {seed} on {where}: "
+          f"{metrics.get('items_per_s', 0.0):,.0f} items/s in "
+          f"{time.time() - t0:.0f}s" + (
               "" if ok else f"; FAILED rc={out.returncode}\n"
               f"{out.stderr[-3000:]}"), file=sys.stderr)
-    return {"items_per_s": rate, "correct": ok}
+    return {"metrics": metrics, "correct": ok}
 
 
 def headline() -> dict:
@@ -122,7 +127,8 @@ def headline() -> dict:
         for w in WORKLOADS:
             for level, cores in order:
                 rec = run_child(w, seed, cores)
-                rates[w][level].append(round(rec["items_per_s"], 1))
+                rates[w][level].append(
+                    round(rec["metrics"].get("items_per_s", 0.0), 1))
                 correct &= rec["correct"]
     eff = {w: round(efficiency(r["lo"], r["hi"]), 3)
            for w, r in rates.items()}

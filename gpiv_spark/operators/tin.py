@@ -56,13 +56,18 @@ TPU_COLS = ["var_x", "var_y", "var_z", "cov_xy", "cov_xz", "cov_yz"]
 
 # Fixed task count for the pack-build kernel stage. Fixed (not
 # cores-derived) so task granularity is identical at every measured
-# parallelism level, and small: each Python task pays a fixed runner
-# handshake, and with the C Delaunay core the per-cell kernel is cheap
-# enough that this overhead outweighs wave balance. Re-measured
-# (best-of-2 certified builds): 32 cores/1.6M pts 10.6 s (128 tasks)
-# -> 9.8 s (64); 8 cores/400k 5.2/4.3 -> 4.2/4.5. 32 tasks is
-# slightly faster still at 8 cores but leaves a single skew-sensitive
-# wave at 32 cores; 64 keeps two waves.
+# parallelism level, and small: each Python task pays a fixed cost
+# before its kernel runs, and with the C Delaunay core the per-cell
+# kernel is cheap enough that this overhead outweighs wave balance.
+# That fixed cost was ~70 ms of core time per task when 64 was chosen
+# and is ~24 ms since workers freeze their heap after the first task
+# and talk to the JVM over Unix sockets (session.py; a 256-task no-op
+# mapInPandas at 4 cores, 4.3-4.6 s -> 1.5-1.6 s). 64 has not been
+# re-tuned at the new floor. Measured at the old floor (best-of-2
+# certified builds): 32 cores/1.6M pts 10.6 s (128 tasks) -> 9.8 s
+# (64); 8 cores/400k 5.2/4.3 -> 4.2/4.5. 32 tasks is slightly faster
+# still at 8 cores but leaves a single skew-sensitive wave at 32
+# cores; 64 keeps two waves.
 PACK_TASKS = 64
 
 

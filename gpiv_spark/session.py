@@ -4,23 +4,48 @@ Local mode here, but every knob is chosen for the 1000-executor /
 100 TB case: AQE on (runtime coalesce + skew-join splitting), Arrow
 for the pandas-UDF kernels, shuffle partitions sized to parallelism
 (caller overrides per stage via repartition when data size demands).
+
+Two settings cut the fixed cost every Python task pays, which the
+vectorized pandas/Arrow UDF stages (64 tasks per timed pass) would
+otherwise multiply:
+
+- every Python worker imports ``workerenv/sitecustomize.py`` (via
+  spark.executorEnv.PYTHONPATH), which stops per-task zip re-reads and
+  freezes the worker's heap after its first task;
+- the JVM <-> worker channel runs over Unix-domain sockets in a private
+  (0700) directory, one per driver process, short enough for AF_UNIX
+  paths, and removed when the interpreter exits (``socket_dir``). Spark
+  skips its socket secret handshake on Unix sockets, so the directory
+  mode is the only access control.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-# Directory holding the worker-side sitecustomize (zipimporter
-# invalidate_caches mtime guard — see workerenv/sitecustomize.py).
-# Appended to the Python workers' PYTHONPATH below: python 3.11 worker
-# processes otherwise re-read every zip archive's central directory at
-# the START OF EVERY TASK (pyspark.worker calls
-# importlib.invalidate_caches() per task), measured at 130-380 ms/task
-# — the bulk of the per-task Python handshake floor.
+# Directory holding the worker-side sitecustomize (see
+# workerenv/sitecustomize.py). Appended to the Python workers'
+# PYTHONPATH below: python 3.11 worker processes otherwise re-read
+# every zip archive's central directory at the START OF EVERY TASK
+# (pyspark.worker calls importlib.invalidate_caches() per task),
+# measured at 130-380 ms/task, and run a full gc.collect() over the
+# ~73k objects of the pandas/pyarrow/pyspark import graph after every
+# task (21-41 ms/task).
 _WORKERENV = str(Path(__file__).resolve().parent / "workerenv")
+
+# AF_UNIX socket paths hold at most 107 bytes. Spark names each socket
+# ``<dir>/.<uuid4>.sock`` (43 bytes after the dir), and mkdtemp adds
+# "/" + prefix + 8 random characters to its base directory.
+_UNIX_PATH_MAX = 107
+_SOCK_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
+_SOCK_DIR_PREFIX = "gpiv-uds-"
 
 
 def default_driver_mem() -> str:
@@ -46,6 +71,25 @@ def default_cpus() -> int:
     if env:
         return int(env)
     return len(os.sched_getaffinity(0))
+
+
+@functools.cache
+def socket_dir() -> str:
+    """The process's private (0700) directory for Unix sockets, made on
+    first use under the temp dir ($TMPDIR) when the socket paths fit
+    there, else under /tmp (a long checkout or work path would otherwise
+    fail every Python task with "AF_UNIX path too long"), and removed
+    with any sockets left in it when the interpreter exits. One per
+    driver process: the JVM reads the dir of its driver-side socket
+    servers (toArrow, collect) once, from the first session's conf, so
+    later sessions in the process must reuse the path."""
+    room = _UNIX_PATH_MAX - _SOCK_NAME_LEN - len(f"/{_SOCK_DIR_PREFIX}") - 8
+    base = tempfile.gettempdir()
+    if len(base) > room:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix=_SOCK_DIR_PREFIX, dir=base)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
@@ -94,5 +138,11 @@ def get_spark(app: str = "gpiv_spark", cpus: int | None = None,
                 f"-Xms{driver_mem} -XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Unix-domain sockets for the JVM <-> Python worker channel:
+        # over loopback TCP a no-op task (heap frozen) spent ~54 of its
+        # ~61 ms of wall waiting on the JVM in pyarrow.ipc.open_stream
+        # and read_int. socket_dir() holds the directory rules.
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
         .getOrCreate()
     )

@@ -40,3 +40,41 @@ def test_child_argv_is_untraced_perfbench_run():
         "--workload": "doc_stream", "--seed": "2",
         "--seconds": "15", "--trace": "0",
     }
+
+
+def test_ab_pairs_claim_rule():
+    from tools.ab_pairs import compare
+
+    parent = [100.0, 102.0, 98.0, 101.0, 99.0, 100.0, 103.0, 97.0, 100.0, 101.0]
+    # 9 of 10 wins and a median gap far outside the parent's IQR
+    change = [130.0] * 9 + [99.0]
+    r = compare(parent, change, higher=True, bound=0.25)
+    assert (r["wins"], r["pairs"], r["claim"]) == (9, 10, True)
+    assert r["ratios"][0] == 1.3
+    # 8 of 10 wins is not enough, however large the gap
+    r = compare(parent, [130.0] * 8 + [90.0, 90.0], higher=True, bound=0.25)
+    assert (r["wins"], r["claim"]) == (8, False)
+    # every pair won, but by less than the parent's own spread
+    r = compare(parent, [p + 0.5 for p in parent], higher=True, bound=0.25)
+    assert r["wins"] == 10 and not r["claim"]
+    # ties count for neither side
+    assert compare(parent, parent, higher=True, bound=0.25)["wins"] == 0
+    # lower is better: smaller values win
+    r = compare(parent, [70.0] * 10, higher=False, bound=0.25)
+    assert (r["wins"], r["claim"]) == (10, True)
+
+
+def test_ab_pairs_bound_reading():
+    from tools.ab_pairs import compare
+
+    tight = [100.0, 101.0, 99.0, 100.0]
+    assert compare(tight, [90.0] * 4, True, 0.25)["bound"] == "ok"
+    r = compare(tight, [70.0] * 4, True, 0.25)
+    assert r["bound"] == "worse" and abs(r["worse_by"] - 0.30) < 1e-9
+    # a parent spread wider than the bound leaves the metric unresolved ...
+    wide = [50.0, 80.0, 120.0, 150.0]
+    assert compare(wide, [95.0] * 4, True, 0.25)["bound"] == "unresolved"
+    # ... unless every change run beats every parent run
+    assert compare(wide, [160.0] * 4, True, 0.25)["bound"] == "ok"
+    # lower is better (memory): a higher median is worse
+    assert compare(tight, [130.0] * 4, False, 0.2)["bound"] == "worse"
