@@ -5,10 +5,14 @@ J1 operator runs it per spatial cell inside applyInPandas, so a
 self-contained NumPy implementation is required anyway — see
 SURVEY.md §7.3 "Distributed Delaunay").
 
-Bowyer-Watson incremental insertion with vectorized in-circumcircle
-tests (one NumPy mask per insertion, no per-triangle Python loop on
-the hot test). O(n * m) worst-case with m = live triangles; fine for
-the per-cell point counts the tiling produces (10^2..10^4).
+Bowyer-Watson incremental insertion. The NumPy loop below tests every
+live triangle per insertion (one vectorized mask, no per-triangle
+Python loop), so it is O(n * m) with m = live triangles; it is the
+reference and the fallback. The compiled core (_delaunay_core.c) finds
+the same conflicting triangles through a bucket grid of circumcircles,
+testing only those whose circle can reach the point's bucket, so its
+per-insertion cost stays near-constant at the per-cell point counts
+the tiling produces (10^3..10^4).
 
 ``find_simplex`` mirrors scipy's semantics used by the reference
 (tin_interpolation.py:76-83): returns -1 for points outside the hull.
@@ -24,10 +28,12 @@ def delaunay(points: np.ndarray) -> np.ndarray:
 
     The insertion loop runs in a compiled C core when available
     (functions/_delaunay_core.c — an exact port: same insertion order,
-    same float expression order, same tie handling, so the output is
-    bit-identical to the NumPy loop below, which remains both the
-    reference twin and the fallback; tests/test_delaunay_c.py asserts
-    array equality across fixture shapes). The C core exists because
+    same float expression order, same tie handling, and a grid-indexed
+    search that yields the full scan's conflict set in the full scan's
+    slot order, so the output is bit-identical to the NumPy loop below,
+    which remains both the reference twin and the fallback;
+    tests/test_delaunay_c.py asserts array equality across fixture
+    shapes). The C core exists because
     the NumPy loop pays ~40 us/insertion of interpreter+temporary
     overhead and streams full-range temporaries through DRAM, which
     made the 32-worker pack build memory-bandwidth-bound (round-6

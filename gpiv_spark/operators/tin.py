@@ -15,7 +15,8 @@ oracle-gated kernel behind the ``tin_var`` golden.
 The doc-scale job has ONE triangulation producer and one plan switch:
 
 1. ``certified_blobs``: one kernel call per coarse cell
-   (``_make_cell_blob_kernel``) triangulates the cell plus its halo,
+   (``_make_cell_blob_core``, run through ``groupBy.applyInArrow``)
+   triangulates the cell plus its halo,
    keeps the triangles it owns, certifies each of them against the
    halo it saw, and packs its shard (owned points, triangles as global
    point ids, fine-cell covering pairs) into a binary blob. The repair
@@ -313,19 +314,21 @@ PACK_BLOB_SCHEMA = ("cell long, n_pts long, n_tri long, n_pairs long, "
                     "payload binary")
 
 
-def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
-                           halo_eff: float, edge_eff: float, id_col: str):
-    """Factory for the per-cell pack kernel (shared by the ring-1 pass
-    of build_pack_blobs and the wide-reach certify retries of
-    build_pack_blobs_at_cells). ``halo_eff``/``edge_eff`` are the halo
-    the CERTIFICATE may claim — callers must guarantee the fan-in
-    actually delivered every point within that distance of the cell."""
+def _make_cell_blob_core(n: int, csize: float, nf: int, fs: float,
+                         halo_eff: float, edge_eff: float, id_col: str):
+    """Factory for the per-cell pack kernel's NumPy core, shared by the
+    ring-1 pass of build_pack_blobs and the wide-reach certify retries
+    of build_pack_blobs_at_cells. The core maps ``(cell, col)`` — the
+    cell id and a getter from column name to that group's NumPy array —
+    to the cell's PACK_BLOB_SCHEMA row as a dict in schema order.
+    ``halo_eff``/``edge_eff`` are the halo the CERTIFICATE may claim —
+    callers must guarantee the fan-in actually delivered every point
+    within that distance of the cell."""
     import pickle
 
-    def _cell_blob(key, pdf):
+    def _cell_blob_core(cell: int, col) -> dict:
         import numpy as _np
 
-        cell = int(key[0])
         cy, cx = divmod(cell, n)
         x_lo, x_hi = _X0 + cx * csize, _X0 + (cx + 1) * csize
         y_lo, y_hi = _Y0 + cy * csize, _Y0 + (cy + 1) * csize
@@ -336,24 +339,37 @@ def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
         py_lo = -_np.inf if cy == 0 else y_lo
         py_hi = _np.inf if cy == n - 1 else y_hi
 
-        ax = pdf["x"].to_numpy(_np.float64)
-        ay = pdf["y"].to_numpy(_np.float64)
+        ax = _np.asarray(col("x"), dtype=_np.float64)
+        ay = _np.asarray(col("y"), dtype=_np.float64)
+        aid = _np.asarray(col(id_col), dtype=_np.int64)
         own_pt = (ax >= px_lo) & (ax < px_hi) & (ay >= py_lo) & (ay < py_hi)
         shard = {
             "cell": cell,  # lets merge_pack_blobs order shards by cell
-            "pid": pdf[id_col].to_numpy(_np.int64)[own_pt],
+            "pid": aid[own_pt],
             "px": ax[own_pt],
             "py": ay[own_pt],
-            "pz": pdf["z"].to_numpy(_np.float64)[own_pt],
+            "pz": _np.asarray(col("z"), dtype=_np.float64)[own_pt],
         }
         for t in TPU_COLS:
-            shard[f"p_{t}"] = pdf[t].to_numpy(_np.float64)[own_pt]
+            shard[f"p_{t}"] = _np.asarray(col(t), dtype=_np.float64)[own_pt]
 
-        # deterministic keeper: min id wins for coincident XY
-        ddf = pdf.sort_values(id_col, kind="mergesort").drop_duplicates(
-            subset=["x", "y"])
-        p = ddf[["x", "y"]].to_numpy(_np.float64)
-        pid = ddf[id_col].to_numpy(_np.int64)
+        # deterministic keeper: min id wins for coincident XY. A stable
+        # id sort, then the first row of each XY run of a stable
+        # (x, y) lexsort — the rows, and their id order, that
+        # sort_values(id, kind="mergesort").drop_duplicates(["x", "y"])
+        # keeps (NaN matches NaN there, so it does here too).
+        def same_as_prev(v):
+            return (v[1:] == v[:-1]) | (_np.isnan(v[1:]) & _np.isnan(v[:-1]))
+
+        by_id = _np.argsort(aid, kind="stable")
+        sx, sy = ax[by_id], ay[by_id]
+        run = _np.lexsort((sy, sx))
+        first = _np.ones(len(run), dtype=bool)
+        first[1:] = ~(same_as_prev(sx[run]) & same_as_prev(sy[run]))
+        keep = _np.zeros(len(run), dtype=bool)
+        keep[run[first]] = True
+        p = _np.column_stack([sx[keep], sy[keep]])
+        pid = aid[by_id][keep]
         tri = dl.delaunay(p) if len(p) >= 3 else _np.empty((0, 3), _np.int64)
         n_uncert = 0
         halo_need = 0.0
@@ -462,18 +478,70 @@ def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
         else:
             shard["pair_icell"] = _np.empty(0, _np.int64)
             shard["pair_tri"] = _np.empty(0, _np.int32)
-        return pd.DataFrame(
-            {
-                "cell": [cell],
-                "n_pts": [len(shard["pid"])],
-                "n_tri": [len(tri)],
-                "n_pairs": [len(shard["pair_icell"])],
-                "n_uncert": [n_uncert],
-                "halo_need": [halo_need],
-                "n_outside": [n_outside],
-                "payload": [pickle.dumps(shard, protocol=4)],
-            }
-        )
+        return {
+            "cell": cell,
+            "n_pts": len(shard["pid"]),
+            "n_tri": len(tri),
+            "n_pairs": len(shard["pair_icell"]),
+            "n_uncert": n_uncert,
+            "n_outside": n_outside,
+            "halo_need": halo_need,
+            "payload": pickle.dumps(shard, protocol=4),
+        }
+
+    return _cell_blob_core
+
+
+def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
+                           halo_eff: float, edge_eff: float, id_col: str):
+    """The pack kernel as a pandas UDF body: ``(key, pdf)`` -> a
+    one-row pandas DataFrame. A thin adapter over _make_cell_blob_core
+    for callers that hold pandas groups (in-process kernel timing,
+    tests); the Spark stages use _make_cell_blob_arrow_kernel."""
+    core = _make_cell_blob_core(n, csize, nf, fs, halo_eff, edge_eff, id_col)
+
+    def _cell_blob(key, pdf):
+        row = core(int(key[0]), lambda c: pdf[c].to_numpy())
+        return pd.DataFrame({k: [v] for k, v in row.items()})
+
+    return _cell_blob
+
+
+def _arrow_numpy(arr) -> np.ndarray:
+    """A pyarrow column as NumPy. Decimal columns become float64 with
+    each value exactly ``float(decimal)``, as pandas' object-column
+    conversion gives them (pyarrow's own decimal cast rounds
+    differently on ~1-30% of values): unscaled integers below 2**53
+    divided by the exact power of ten, which IEEE division rounds
+    correctly; other decimals go through Python Decimals."""
+    import pyarrow as pa
+
+    t = arr.type
+    if pa.types.is_decimal128(t) and arr.null_count == 0 and 0 <= t.scale <= 22:
+        a = arr.combine_chunks()
+        raw = np.frombuffer(a.buffers()[1], dtype=np.int64,
+                            count=2 * (a.offset + len(a)))[2 * a.offset:]
+        lo, hi = raw[0::2], raw[1::2]
+        if ((hi == (lo >> 63)) & (lo > -(1 << 53)) & (lo < (1 << 53))).all():
+            return lo / float(10 ** t.scale)
+    if pa.types.is_decimal(t):
+        return np.asarray(arr.to_pylist(), dtype=np.float64)
+    return arr.to_numpy()
+
+
+def _make_cell_blob_arrow_kernel(n: int, csize: float, nf: int, fs: float,
+                                 halo_eff: float, edge_eff: float,
+                                 id_col: str):
+    """The pack kernel as an ``applyInArrow`` body: ``(key, table)`` ->
+    a one-row pyarrow Table in PACK_BLOB_SCHEMA order. Skips the
+    per-group Arrow -> pandas conversion of the pandas adapter."""
+    import pyarrow as pa
+
+    core = _make_cell_blob_core(n, csize, nf, fs, halo_eff, edge_eff, id_col)
+
+    def _cell_blob(key, table):
+        row = core(key[0].as_py(), lambda c: _arrow_numpy(table.column(c)))
+        return pa.Table.from_pydict({k: [v] for k, v in row.items()})
 
     return _cell_blob
 
@@ -533,12 +601,12 @@ def build_pack_blobs(spark: SparkSession, points: DataFrame,
         pts = pts.filter(F.col("cell").isin([int(c) for c in only_cells]))
         npart = max(8, min(PACK_TASKS, 4 * len(only_cells)))
 
-    _cell_blob = _make_cell_blob_kernel(n, csize, nf, fs, halo_eff,
-                                        edge_eff, id_col)
+    _cell_blob = _make_cell_blob_arrow_kernel(n, csize, nf, fs, halo_eff,
+                                              edge_eff, id_col)
     return (
         pts.repartition(npart, "cell")
         .groupBy("cell")
-        .applyInPandas(_cell_blob, PACK_BLOB_SCHEMA)
+        .applyInArrow(_cell_blob, PACK_BLOB_SCHEMA)
     )
 
 
@@ -571,13 +639,13 @@ def build_pack_blobs_at_cells(spark: SparkSession, points: DataFrame,
     pts = (points.crossJoin(F.broadcast(tgt))
            .filter(F.expr(keep))
            .select("cell", id_col, "x", "y", "z", *TPU_COLS))
-    _cell_blob = _make_cell_blob_kernel(n, csize, nf, fs, halo_m, halo_m,
-                                        id_col)
+    _cell_blob = _make_cell_blob_arrow_kernel(n, csize, nf, fs, halo_m,
+                                              halo_m, id_col)
     npart = max(8, min(PACK_TASKS, 4 * len(cells)))
     return (
         pts.repartition(npart, "cell")
         .groupBy("cell")
-        .applyInPandas(_cell_blob, PACK_BLOB_SCHEMA)
+        .applyInArrow(_cell_blob, PACK_BLOB_SCHEMA)
     )
 
 

@@ -41,10 +41,13 @@ from pyspark.sql import SparkSession
 _WORKERENV = str(Path(__file__).resolve().parent / "workerenv")
 
 # AF_UNIX socket paths hold at most 107 bytes. Spark names each socket
-# ``<dir>/.<uuid4>.sock`` (43 bytes after the dir), and mkdtemp adds
-# "/" + prefix + 8 random characters to its base directory.
+# ``<dir>/.<uuid4>.sock`` (43 bytes after the dir) and rejects a
+# spark.python.unix.domain.socket.dir longer than 61 characters
+# (Spark 4.1: INVALID_CONF_VALUE.REQUIREMENT at session start); mkdtemp
+# adds "/" + prefix + 8 random characters to its base directory.
 _UNIX_PATH_MAX = 107
 _SOCK_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
+_SPARK_SOCK_DIR_MAX = 61
 _SOCK_DIR_PREFIX = "gpiv-uds-"
 
 
@@ -76,14 +79,16 @@ def default_cpus() -> int:
 @functools.cache
 def socket_dir() -> str:
     """The process's private (0700) directory for Unix sockets, made on
-    first use under the temp dir ($TMPDIR) when the socket paths fit
-    there, else under /tmp (a long checkout or work path would otherwise
-    fail every Python task with "AF_UNIX path too long"), and removed
+    first use under the temp dir ($TMPDIR) when both the dir fits Spark's
+    limit and the socket paths fit AF_UNIX's, else under /tmp (a long
+    checkout or work path would otherwise fail the session start or
+    every Python task with "AF_UNIX path too long"), and removed
     with any sockets left in it when the interpreter exits. One per
     driver process: the JVM reads the dir of its driver-side socket
     servers (toArrow, collect) once, from the first session's conf, so
     later sessions in the process must reuse the path."""
-    room = _UNIX_PATH_MAX - _SOCK_NAME_LEN - len(f"/{_SOCK_DIR_PREFIX}") - 8
+    dir_max = min(_UNIX_PATH_MAX - _SOCK_NAME_LEN, _SPARK_SOCK_DIR_MAX)
+    room = dir_max - len(f"/{_SOCK_DIR_PREFIX}") - 8
     base = tempfile.gettempdir()
     if len(base) > room:
         base = "/tmp"

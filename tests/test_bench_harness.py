@@ -78,3 +78,28 @@ def test_ab_pairs_bound_reading():
     assert compare(wide, [160.0] * 4, True, 0.25)["bound"] == "ok"
     # lower is better (memory): a higher median is worse
     assert compare(tight, [130.0] * 4, False, 0.2)["bound"] == "worse"
+
+
+def test_ab_pairs_drops_failed_pairs():
+    """A crashed child has no metrics: its pair leaves every metric's
+    comparison instead of scoring 0.0 (a dead parent used to count as a
+    change win and drag the parent's quartiles)."""
+    from tools.ab_pairs import compare, complete_pairs
+
+    def run(seed, rate, correct=True):
+        return {"seed": seed, "correct": correct,
+                "metrics": {"items_per_s": rate} if correct else {}}
+
+    parent = [run(1, 100.0), run(2, 0.0, correct=False), run(3, 104.0),
+              run(4, 98.0)]
+    change = [run(1, 99.0), run(2, 120.0), run(3, 101.0),
+              run(4, 0.0, correct=False)]
+    kept, dropped = complete_pairs(parent, change)
+    assert dropped == [2, 4]
+    assert [(p["seed"], c["seed"]) for p, c in kept] == [(1, 1), (3, 3)]
+    par = [p["metrics"]["items_per_s"] for p, _ in kept]
+    chg = [c["metrics"]["items_per_s"] for _, c in kept]
+    r = compare(par, chg, higher=True, bound=0.25)
+    assert (r["wins"], r["pairs"]) == (0, 2)
+    # quartiles over the kept pairs only: no 0.0 from the crashed runs
+    assert r["parent_q"] == (101.0, 102.0, 103.0)

@@ -226,3 +226,64 @@ def test_in_ring_repairs_hand_their_halo_need_to_the_targeted_retry(
     want = _global_triples(pdf)
     assert not (got - want), "rogue triangles after the targeted retry"
     assert len(want - got) < 0.01 * len(want)
+
+
+def test_blob_adapters_agree_on_planted_duplicates(spark):
+    """The Spark stages run the pack kernel through applyInArrow; the
+    pandas adapter (_make_cell_blob_kernel) stays for in-process
+    callers. Fed the same group rows, both must emit the same counter
+    columns and byte-equal payloads, with decimal TPU columns (Spark SQL
+    literals like 0.0001 are DECIMAL) converted exactly as pandas does.
+    Of points sharing an XY, the min id is the one triangulated."""
+    import pickle
+
+    import pandas as pd
+    import pyarrow as pa
+
+    pdf = _cloud_pdf(3000, seed=5)
+    src = pdf.iloc[:60]
+    planted = [
+        src.iloc[:20],                                      # same row twice
+        src.iloc[20:40].assign(pid=src["pid"].iloc[20:40] + 10_000,
+                               z=src["z"].iloc[20:40] + 1.0),  # higher id
+        src.iloc[40:60].assign(pid=src["pid"].iloc[40:60] - 10_000,
+                               z=src["z"].iloc[40:60] - 1.0),  # lower id
+    ]
+    pdf = pd.concat([pdf, *planted], ignore_index=True)
+    df = spark.createDataFrame(pdf).withColumn(
+        "var_x", F.expr("(1 + pid % 7) * 0.0001"))
+    cell_res, halo = 2, 20.0
+    n = 1 << cell_res
+    csize = _EXT / n
+    args = (n, csize, 256, _EXT / 256, halo, halo, "pid")
+    fan = tin.fan_out_points(spark, df, cell_res, halo, extra_cols=("pid",))
+    assert dict(fan.dtypes)["var_x"].startswith("decimal")
+
+    fields = [c.split() for c in tin.PACK_BLOB_SCHEMA.split(", ")]
+
+    def both(key, table):
+        a = tin._make_cell_blob_arrow_kernel(*args)(key, table).to_pylist()[0]
+        p = tin._make_cell_blob_kernel(*args)(
+            (key[0].as_py(),), table.to_pandas()).iloc[0]
+        return pa.Table.from_pydict(
+            {f"a_{f}": [a[f]] for f, _ in fields}
+            | {f"p_{f}": [p[f].item() if hasattr(p[f], "item") else p[f]]
+               for f, _ in fields})
+
+    schema = ", ".join(f"{side}_{f} {t}" for side in "ap" for f, t in fields)
+    rows = fan.groupBy("cell").applyInArrow(both, schema).collect()
+    assert len(rows) == n * n
+    verts = set()
+    for r in rows:
+        for f, _ in fields:
+            assert r[f"a_{f}"] == r[f"p_{f}"], (r["a_cell"], f)
+        shard = pickle.loads(r["a_payload"])
+        for k in ("v1", "v2", "v3"):
+            verts.update(shard[k].tolist())
+    # min id wins for coincident XY (the pandas keeper rule)
+    kept = pdf.sort_values("pid", kind="mergesort").drop_duplicates(
+        subset=["x", "y"])["pid"]
+    assert verts <= set(kept.tolist())
+    assert set(planted[2]["pid"]) <= verts
+    assert not set(planted[1]["pid"]) & verts
+    assert not set(src["pid"].iloc[40:60]) & verts

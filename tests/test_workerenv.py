@@ -206,3 +206,43 @@ def test_socket_path_fits_on_long_tmpdir(tmp_path):
     left = [p.name for p in long_tmp.rglob("*")
             if p.name.endswith(".sock") or p.name.startswith("gpiv-uds-")]
     assert not left, left
+
+
+def test_session_starts_on_46_char_tmpdir(tmp_path):
+    """A 46-character TMPDIR fits AF_UNIX's socket paths but not Spark's
+    61-character socket-dir limit (TMPDIR + 18); the session must still
+    start and run a Python task."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import tempfile
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    top = tempfile.mkdtemp(dir="/tmp")
+    tmp = top + "/" + "t" * (46 - len(top) - 1)
+    os.makedirs(tmp)
+    assert len(tmp) == 46
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from gpiv_spark.session import get_spark\n"
+        "spark = get_spark(cpus=1)\n"
+        "d = spark.sparkContext.getConf().get(\n"
+        "    'spark.python.unix.domain.socket.dir')\n"
+        "n = spark.range(0, 100, 1, 2).mapInPandas(lambda it: it, 'id long').count()\n"
+        "assert n == 100, n\n"
+        "print(d, flush=True)\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, TMPDIR=tmp, SPARK_GRAFT_DRIVER_MEM="1g")
+    try:
+        out = subprocess.run([sys.executable, "-c", script], env=env,
+                             cwd=root, capture_output=True, text=True,
+                             timeout=600)
+    finally:
+        shutil.rmtree(top, ignore_errors=True)
+    assert out.returncode == 0, out.stderr[-3000:]
+    d = out.stdout.split()[-1]
+    assert len(d) <= 61 and d.startswith("/tmp/gpiv-uds-"), d

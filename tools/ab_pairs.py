@@ -18,6 +18,9 @@ neither side), each side's median and quartiles, and two readings:
   (IQR / median) exceeds the bound, unless every change run beats
   every parent run.
 
+A pair in which either child failed (crashed, or reported a wrong
+answer) is left out of every metric's comparison — a crashed run has
+no metrics to compare — and its seed is listed; the exit code is then 1.
 The last line of stdout is one JSON object with every run's metrics.
 """
 
@@ -70,6 +73,18 @@ def compare(parent: list[float], change: list[float], higher: bool,
     }
 
 
+def complete_pairs(parent: list[dict], change: list[dict]):
+    """The (parent run, change run) pairs in which both runs were
+    correct, and the seeds of the other pairs."""
+    kept, dropped = [], []
+    for p, c in zip(parent, change):
+        if p["correct"] and c["correct"]:
+            kept.append((p, c))
+        else:
+            dropped.append(p["seed"])
+    return kept, dropped
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent", type=Path)
@@ -89,10 +104,14 @@ def main(argv=None) -> int:
             rec = bench.run_child(args.workload, seed, root=sides[side])
             runs[side].append({"seed": seed, **rec})
     report = {}
-    for m in spec:
+    kept, dropped = complete_pairs(runs["parent"], runs["change"])
+    if dropped:
+        print(f"{args.workload}: pairs dropped (a run failed), seeds "
+              + " ".join(map(str, dropped)))
+    for m in spec if kept else []:
         name = m["name"]
-        par = [r["metrics"].get(name, 0.0) for r in runs["parent"]]
-        chg = [r["metrics"].get(name, 0.0) for r in runs["change"]]
+        par = [p["metrics"][name] for p, _ in kept]
+        chg = [c["metrics"][name] for _, c in kept]
         r = compare(par, chg, m["better"] == "higher", m["bound"])
         report[name] = r
         print(f"{args.workload} {name} ({m['better']} is better, bound "
