@@ -15,8 +15,9 @@ oracle-gated kernel behind the ``tin_var`` golden.
 The doc-scale job has ONE triangulation producer and one plan switch:
 
 1. ``certified_blobs``: one kernel call per coarse cell
-   (``_make_cell_blob_core``, run through ``groupBy.applyInArrow``)
-   triangulates the cell plus its halo,
+   (``_make_cell_blob_core``; the stage hash-partitions the fan-out by
+   cell and each ``mapInArrow`` task groups its cells in NumPy, so no
+   engine-side sort runs) triangulates the cell plus its halo,
    keeps the triangles it owns, certifies each of them against the
    halo it saw, and packs its shard (owned points, triangles as global
    point ids, fine-cell covering pairs) into a binary blob. The repair
@@ -55,11 +56,12 @@ TIN_SCHEMA = (
 
 TPU_COLS = ["var_x", "var_y", "var_z", "cov_xy", "cov_xz", "cov_yz"]
 
-# Fixed task count for the pack-build kernel stage. Fixed (not
-# cores-derived) so task granularity is identical at every measured
-# parallelism level, and small: each Python task pays a fixed cost
-# before its kernel runs, and with the C Delaunay core the per-cell
-# kernel is cheap enough that this overhead outweighs wave balance.
+# Fixed task count (hash partitions of cells, one Arrow stream each) for
+# the pack-build kernel stage. Fixed (not cores-derived) so task
+# granularity is identical at every measured parallelism level, and
+# small: each Python task pays a fixed cost before its kernel runs, and
+# with the C Delaunay core the per-cell kernel is cheap enough that this
+# overhead outweighs wave balance.
 # That fixed cost was ~70 ms of core time per task when 64 was chosen
 # and is ~24 ms since workers freeze their heap after the first task
 # and talk to the JVM over Unix sockets (session.py; a 256-task no-op
@@ -97,9 +99,10 @@ def fan_out_points(spark: SparkSession, points: DataFrame, cell_res: int,
         halo_m = csize  # degenerate: full neighbor ring
     if edge_halo_m is None:
         edge_halo_m = halo_m
-    neigh = spark.createDataFrame(
-        [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)], "dr int, dc int"
-    )
+    # the 9 (dr, dc) offsets, dr-major, as a one-task broadcast. Few,
+    # string-expression calls: each API call costs ~1.5 ms on the driver
+    neigh = spark.range(0, 9, 1, 1).selectExpr("id DIV 3 - 1 AS dr",
+                                                "id % 3 - 1 AS dc")
 
     # double literals: a bare 29.875 parses as DECIMAL, which made every
     # row and neighbour run cast(cast(_ix as decimal(20,0)) * 29.875 as
@@ -122,20 +125,17 @@ def fan_out_points(spark: SparkSession, points: DataFrame, cell_res: int,
         f" OR (dc = 1 AND {cs} - {fx} < {h}))"
         f" AND (dr = 0 OR (dr = -1 AND {fy} < {h})"
         f" OR (dr = 1 AND {cs} - {fy} < {h}))"
+        f" AND _ix + dc BETWEEN 0 AND {n - 1}"
+        f" AND _iy + dr BETWEEN 0 AND {n - 1}"
     )
+    ix, iy = (f"greatest(0, least({n - 1}, CAST(floor(({v} - {v0}) / {ext}"
+              f" * {n}) AS BIGINT)))" for v, v0 in (("x", x0), ("y", y0)))
     return (
-        points.withColumn("_ix", F.expr(
-            f"greatest(0, least({n - 1}, CAST(floor((x - {x0}) / {ext} * {n}) AS BIGINT)))"))
-        .withColumn("_iy", F.expr(
-            f"greatest(0, least({n - 1}, CAST(floor((y - {y0}) / {ext} * {n}) AS BIGINT)))"))
+        points.selectExpr("*", f"{ix} AS _ix", f"{iy} AS _iy")
         .crossJoin(F.broadcast(neigh))
-        .filter(F.expr(keep))
-        .withColumn("_jx", F.col("_ix") + F.col("dc"))
-        .withColumn("_jy", F.col("_iy") + F.col("dr"))
-        .filter((F.col("_jx") >= 0) & (F.col("_jx") < n)
-                & (F.col("_jy") >= 0) & (F.col("_jy") < n))
-        .withColumn("cell", F.col("_jy") * n + F.col("_jx"))
-        .select("cell", *extra_cols, "x", "y", "z", *TPU_COLS)
+        .where(keep)
+        .selectExpr(f"(_iy + dr) * {n} + (_ix + dc) AS cell", *extra_cols,
+                    "x", "y", "z", *TPU_COLS)
     )
 
 
@@ -497,7 +497,7 @@ def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
     """The pack kernel as a pandas UDF body: ``(key, pdf)`` -> a
     one-row pandas DataFrame. A thin adapter over _make_cell_blob_core
     for callers that hold pandas groups (in-process kernel timing,
-    tests); the Spark stages use _make_cell_blob_arrow_kernel."""
+    tests); the Spark stages use _make_pack_task_kernel."""
     core = _make_cell_blob_core(n, csize, nf, fs, halo_eff, edge_eff, id_col)
 
     def _cell_blob(key, pdf):
@@ -507,43 +507,45 @@ def _make_cell_blob_kernel(n: int, csize: float, nf: int, fs: float,
     return _cell_blob
 
 
-def _arrow_numpy(arr) -> np.ndarray:
-    """A pyarrow column as NumPy. Decimal columns become float64 with
-    each value exactly ``float(decimal)``, as pandas' object-column
-    conversion gives them (pyarrow's own decimal cast rounds
-    differently on ~1-30% of values): unscaled integers below 2**53
-    divided by the exact power of ten, which IEEE division rounds
-    correctly; other decimals go through Python Decimals."""
-    import pyarrow as pa
-
-    t = arr.type
-    if pa.types.is_decimal128(t) and arr.null_count == 0 and 0 <= t.scale <= 22:
-        a = arr.combine_chunks()
-        raw = np.frombuffer(a.buffers()[1], dtype=np.int64,
-                            count=2 * (a.offset + len(a)))[2 * a.offset:]
-        lo, hi = raw[0::2], raw[1::2]
-        if ((hi == (lo >> 63)) & (lo > -(1 << 53)) & (lo < (1 << 53))).all():
-            return lo / float(10 ** t.scale)
-    if pa.types.is_decimal(t):
-        return np.asarray(arr.to_pylist(), dtype=np.float64)
-    return arr.to_numpy()
-
-
-def _make_cell_blob_arrow_kernel(n: int, csize: float, nf: int, fs: float,
-                                 halo_eff: float, edge_eff: float,
-                                 id_col: str):
-    """The pack kernel as an ``applyInArrow`` body: ``(key, table)`` ->
-    a one-row pyarrow Table in PACK_BLOB_SCHEMA order. Skips the
-    per-group Arrow -> pandas conversion of the pandas adapter."""
+def _make_pack_task_kernel(n: int, csize: float, nf: int, fs: float,
+                           halo_eff: float, edge_eff: float, id_col: str):
+    """The pack kernel as a ``mapInArrow`` body: one task's record
+    batches -> one RecordBatch of PACK_BLOB_SCHEMA rows, one per cell,
+    cell-ascending. Cells are grouped by a stable NumPy argsort of
+    ``cell``, so each cell's rows reach _make_cell_blob_core in arrival
+    order and no engine-side sort runs. Sound only when every cell is
+    whole in one task: repartition(n, "cell") guarantees that (AQE
+    never coalesces or splits a by-number repartition), and
+    certified_blobs rejects a blob table that holds a cell twice."""
     import pyarrow as pa
 
     core = _make_cell_blob_core(n, csize, nf, fs, halo_eff, edge_eff, id_col)
+    names = (id_col, "x", "y", "z", *TPU_COLS)
 
-    def _cell_blob(key, table):
-        row = core(key[0].as_py(), lambda c: _arrow_numpy(table.column(c)))
-        return pa.Table.from_pydict({k: [v] for k, v in row.items()})
+    def _pack_task(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches)
+        cols = {c: table.column(c).to_numpy() for c in names}
+        cell = table.column("cell").to_numpy()
+        order = np.argsort(cell, kind="stable")
+        cell = cell[order]
+        starts = np.flatnonzero(np.r_[True, cell[1:] != cell[:-1]])
+        rows = [core(int(cell[a]), lambda c, at=order[a:b]: cols[c][at])
+                for a, b in zip(starts, np.r_[starts[1:], len(cell)])]
+        yield pa.RecordBatch.from_pylist(rows)
 
-    return _cell_blob
+    return _pack_task
+
+
+def _double_points(points: DataFrame, id_col: str) -> DataFrame:
+    """A pack stage's input: the id, coordinates and TPU as DOUBLE, cast
+    once before the fan-out, so no DECIMAL (Spark SQL's 0.0001 is one)
+    crosses a join, the shuffle or Arrow. Spark's cast rounds correctly:
+    each value is exactly ``float(Decimal)``."""
+    return points.selectExpr(id_col, *(f"CAST({c} AS DOUBLE) AS {c}"
+                                       for c in ("x", "y", "z", *TPU_COLS)))
 
 
 def build_pack_blobs(spark: SparkSession, points: DataFrame,
@@ -574,8 +576,7 @@ def build_pack_blobs(spark: SparkSession, points: DataFrame,
     # clamp closes the caller-supplied halo_m > csize hole here).
     halo_eff = min(csize, csize if halo_m is None else halo_m)
     edge_eff = min(csize, halo_eff if edge_halo_m is None else edge_halo_m)
-    pts = fan_out_points(spark, points, cell_res, halo_m,
-                         extra_cols=(id_col,), edge_halo_m=edge_halo_m)
+    points = _double_points(points, id_col)
     npart = PACK_TASKS
     if only_cells is not None:
         # certify-retry path: re-derive just these cells' shards. A
@@ -585,29 +586,22 @@ def build_pack_blobs(spark: SparkSession, points: DataFrame,
         # actual group count instead of paying PACK_TASKS handshakes
         # for a handful of cells (task count stays data-derived, never
         # cores-derived — the granularity discipline in CLAUDE.md).
-        reach = max(halo_eff, edge_eff) + csize
-        pre = " OR ".join(
-            f"(x >= {_X0 + (c % n) * csize - reach!r} AND "
-            f"x < {_X0 + (c % n + 1) * csize + reach!r} AND "
-            f"y >= {_Y0 + (c // n) * csize - reach!r} AND "
-            f"y < {_Y0 + (c // n + 1) * csize + reach!r})"
-            for c in only_cells[:64]
-        )
-        if pre and len(only_cells) <= 64:
-            points = points.filter(F.expr(pre))
-            pts = fan_out_points(spark, points, cell_res, halo_m,
-                                 extra_cols=(id_col,),
-                                 edge_halo_m=edge_halo_m)
-        pts = pts.filter(F.col("cell").isin([int(c) for c in only_cells]))
+        if 0 < len(only_cells) <= 64:
+            reach = max(halo_eff, edge_eff) + csize
+            points = points.where(" OR ".join(
+                f"(x >= {_X0 + (c % n) * csize - reach!r} AND "
+                f"x < {_X0 + (c % n + 1) * csize + reach!r} AND "
+                f"y >= {_Y0 + (c // n) * csize - reach!r} AND "
+                f"y < {_Y0 + (c // n + 1) * csize + reach!r})"
+                for c in only_cells))
         npart = max(8, min(PACK_TASKS, 4 * len(only_cells)))
-
-    _cell_blob = _make_cell_blob_arrow_kernel(n, csize, nf, fs, halo_eff,
-                                              edge_eff, id_col)
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInArrow(_cell_blob, PACK_BLOB_SCHEMA)
-    )
+    pts = fan_out_points(spark, points, cell_res, halo_m,
+                         extra_cols=(id_col,), edge_halo_m=edge_halo_m)
+    if only_cells is not None:
+        pts = pts.where(F.col("cell").isin([int(c) for c in only_cells]))
+    return pts.repartition(npart, "cell").mapInArrow(
+        _make_pack_task_kernel(n, csize, nf, fs, halo_eff, edge_eff, id_col),
+        PACK_BLOB_SCHEMA)
 
 
 def build_pack_blobs_at_cells(spark: SparkSession, points: DataFrame,
@@ -636,17 +630,13 @@ def build_pack_blobs_at_cells(spark: SparkSession, points: DataFrame,
         "cy_lo double, cy_hi double")
     keep = (f"(x >= cx_lo - {halo_m!r} AND x < cx_hi + {halo_m!r} "
             f"AND y >= cy_lo - {halo_m!r} AND y < cy_hi + {halo_m!r})")
-    pts = (points.crossJoin(F.broadcast(tgt))
-           .filter(F.expr(keep))
+    pts = (_double_points(points, id_col).crossJoin(F.broadcast(tgt))
+           .where(keep)
            .select("cell", id_col, "x", "y", "z", *TPU_COLS))
-    _cell_blob = _make_cell_blob_arrow_kernel(n, csize, nf, fs, halo_m,
-                                              halo_m, id_col)
     npart = max(8, min(PACK_TASKS, 4 * len(cells)))
-    return (
-        pts.repartition(npart, "cell")
-        .groupBy("cell")
-        .applyInArrow(_cell_blob, PACK_BLOB_SCHEMA)
-    )
+    return pts.repartition(npart, "cell").mapInArrow(
+        _make_pack_task_kernel(n, csize, nf, fs, halo_m, halo_m, id_col),
+        PACK_BLOB_SCHEMA)
 
 
 def merge_pack_blobs(blob_rows, index_res: int) -> dict:
@@ -888,6 +878,10 @@ def certified_blobs(spark: SparkSession, points: DataFrame,
                 "certificate's bbox clamp is unsound for this cloud — "
                 "re-extent the data")
         cells = counters.column("cell").to_pylist()
+        if len(set(cells)) != len(cells):
+            raise ValueError(
+                "a build round returned more than one blob for a cell: "
+                "its rows were split across pack tasks")
         owner.update(dict.fromkeys(cells, len(rounds) - 1))
         failed = [c for c, u in zip(cells,
                                     counters.column("n_uncert").to_pylist())

@@ -296,3 +296,39 @@ def test_fan_out_points_runs_no_decimal_arithmetic(spark):
     for plan in (qe.analyzed(), qe.optimizedPlan()):
         text = plan.toString()
         assert "29.875" in text and "decimal" not in text.lower(), text
+
+
+def _executed_nodes(df) -> list[str]:
+    """Node names of an executed DataFrame's final (adaptive) plan."""
+    import re
+
+    tree = df._jdf.queryExecution().executedPlan().executedPlan()
+    return [re.sub(r"^[\s:+\-]*(\*\(\d+\) )?", "", line).split(" ")[0]
+            for line in tree.treeString().splitlines()]
+
+
+def test_tin_pack_stages_sort_nothing(spark):
+    """The TIN pack stages hash-partition the fan-out by cell and group
+    each task's cells in NumPy (one mapInArrow stream per task): the
+    executed plan holds exactly one shuffle Exchange and no Sort or
+    FlatMapGroupsInArrow, on the first pass, the in-ring retry and the
+    wide-reach retry alike."""
+    from gpiv_spark.operators import tin
+
+    points = spark.range(2000).selectExpr(
+        "id AS pid", f"{geocode.xq_expr(d, 'id')} AS x",
+        f"{geocode.yq_expr(d, 'id')} AS y", "1.0 AS z",
+        *(f"0.0001 AS {c}" for c in tin.TPU_COLS))
+    stages = (
+        tin.build_pack_blobs(spark, points, 3, 7, 12.0, "pid"),
+        tin.build_pack_blobs(spark, points, 3, 7, 24.0, "pid",
+                             only_cells=[0, 9]),
+        tin.build_pack_blobs_at_cells(spark, points, [0, 9], 3, 7, 80.0,
+                                      "pid"),
+    )
+    for df in stages:
+        assert df.toArrow().num_rows > 0
+        nodes = _executed_nodes(df)
+        assert nodes.count("Exchange") == 1, nodes
+        assert "MapInArrow" in nodes, nodes
+        assert "Sort" not in nodes and "FlatMapGroupsInArrow" not in nodes, nodes

@@ -229,16 +229,18 @@ def test_in_ring_repairs_hand_their_halo_need_to_the_targeted_retry(
 
 
 def test_blob_adapters_agree_on_planted_duplicates(spark):
-    """The Spark stages run the pack kernel through applyInArrow; the
-    pandas adapter (_make_cell_blob_kernel) stays for in-process
-    callers. Fed the same group rows, both must emit the same counter
-    columns and byte-equal payloads, with decimal TPU columns (Spark SQL
-    literals like 0.0001 are DECIMAL) converted exactly as pandas does.
+    """The Spark stages run the pack kernel once per task through
+    mapInArrow (_make_pack_task_kernel), which groups the task's cells
+    in NumPy; the pandas adapter (_make_cell_blob_kernel) stays for
+    in-process callers. Fed one task's rows — every cell, interleaved
+    across uneven record batches — the task kernel must emit, per cell,
+    the adapter's counter columns and a byte-equal payload for that
+    cell's rows in arrival order, and an empty partition emits nothing.
     Of points sharing an XY, the min id is the one triangulated."""
     import pickle
 
     import pandas as pd
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
     pdf = _cloud_pdf(3000, seed=5)
     src = pdf.iloc[:60]
@@ -256,28 +258,33 @@ def test_blob_adapters_agree_on_planted_duplicates(spark):
     n = 1 << cell_res
     csize = _EXT / n
     args = (n, csize, 256, _EXT / 256, halo, halo, "pid")
-    fan = tin.fan_out_points(spark, df, cell_res, halo, extra_cols=("pid",))
-    assert dict(fan.dtypes)["var_x"].startswith("decimal")
+    fan = tin.fan_out_points(spark, tin._double_points(df, "pid"), cell_res,
+                             halo, extra_cols=("pid",)).toArrow()
+    # one task's input: the rows in a scrambled arrival order, cut into
+    # uneven batches, one of them empty
+    perm = np.random.default_rng(3).permutation(fan.num_rows)
+    rb = fan.take(perm).combine_chunks().to_batches()[0]
+    cuts = [0, 1, 500, 500, 2100, 2101, rb.num_rows]
+    batches = [rb.slice(a, b - a) for a, b in zip(cuts[:-1], cuts[1:])]
 
-    fields = [c.split() for c in tin.PACK_BLOB_SCHEMA.split(", ")]
+    task = tin._make_pack_task_kernel(*args)
+    assert list(task(iter([]))) == []
+    assert list(task(iter([rb.slice(0, 0)]))) == []
+    out = list(task(iter(batches)))
+    assert len(out) == 1
+    rows = out[0].to_pylist()
+    assert [r["cell"] for r in rows] == list(range(n * n))
 
-    def both(key, table):
-        a = tin._make_cell_blob_arrow_kernel(*args)(key, table).to_pylist()[0]
-        p = tin._make_cell_blob_kernel(*args)(
-            (key[0].as_py(),), table.to_pandas()).iloc[0]
-        return pa.Table.from_pydict(
-            {f"a_{f}": [a[f]] for f, _ in fields}
-            | {f"p_{f}": [p[f].item() if hasattr(p[f], "item") else p[f]]
-               for f, _ in fields})
-
-    schema = ", ".join(f"{side}_{f} {t}" for side in "ap" for f, t in fields)
-    rows = fan.groupBy("cell").applyInArrow(both, schema).collect()
-    assert len(rows) == n * n
+    fields = [c.split()[0] for c in tin.PACK_BLOB_SCHEMA.split(", ")]
+    adapter = tin._make_cell_blob_kernel(*args)
     verts = set()
     for r in rows:
-        for f, _ in fields:
-            assert r[f"a_{f}"] == r[f"p_{f}"], (r["a_cell"], f)
-        shard = pickle.loads(r["a_payload"])
+        cell_rows = rb.filter(pc.equal(rb.column("cell"), r["cell"]))
+        p = adapter((r["cell"],), cell_rows.to_pandas()).iloc[0]
+        for f in fields:
+            want = p[f].item() if hasattr(p[f], "item") else p[f]
+            assert r[f] == want, (r["cell"], f)
+        shard = pickle.loads(r["payload"])
         for k in ("v1", "v2", "v3"):
             verts.update(shard[k].tolist())
     # min id wins for coincident XY (the pandas keeper rule)
@@ -287,3 +294,55 @@ def test_blob_adapters_agree_on_planted_duplicates(spark):
     assert set(planted[2]["pid"]) <= verts
     assert not set(planted[1]["pid"]) & verts
     assert not set(src["pid"].iloc[40:60]) & verts
+
+
+def test_spark_decimal_cast_is_float_of_decimal(spark):
+    """The pack stages cast DECIMAL coordinates and TPU to DOUBLE in the
+    JVM (tin._double_points) instead of converting them in the kernel;
+    the pack stays what float(Decimal) values give only because Spark's
+    cast rounds correctly. Random decimals at precisions up to 18
+    (Spark's compact long) and above (BigDecimal), scales 0-10, both
+    signs, plus perfbench's TPU expression, must cast bit for bit."""
+    import random
+    from decimal import Decimal
+
+    rng = random.Random(13)
+    cols, ddl = {}, []
+    for prec in (5, 12, 18, 19, 25, 38):
+        for scale in (0, 1, 4, 7, 10):
+            if scale > prec:
+                continue
+            name = f"d{prec}_{scale}"
+            cols[name] = [Decimal(rng.choice((-1, 1)) * rng.randrange(
+                10 ** rng.randint(1, prec))).scaleb(-scale)
+                for _ in range(300)]
+            ddl.append(f"{name} decimal({prec},{scale})")
+    df = spark.createDataFrame(list(zip(*cols.values())), ", ".join(ddl))
+    df = df.withColumn("tpu", F.expr("(1 + CAST(d18_0 AS BIGINT) % 7) * 0.0001"))
+    names = [*cols, "tpu"]
+    rows = df.selectExpr(*names, *(f"CAST({c} AS DOUBLE) AS {c}_f"
+                                   for c in names)).collect()
+    assert dict(df.dtypes)["tpu"].startswith("decimal")
+    for c in names:
+        dec = [r[c] for r in rows]
+        got = np.array([r[f"{c}_f"] for r in rows], dtype=np.float64)
+        want = np.array([float(v) for v in dec], dtype=np.float64)
+        assert (got.view(np.int64) == want.view(np.int64)).all(), c
+
+
+def test_certified_blobs_rejects_a_split_cell(monkeypatch):
+    """Each cell must be whole in one pack task. A build round whose
+    blob table holds a cell twice fails loudly instead of keeping one
+    of its blobs."""
+    import pyarrow as pa
+
+    class SplitRound:
+        def toArrow(self):
+            return pa.table({"cell": [3, 5, 3], "n_uncert": [0, 0, 0],
+                             "halo_need": [0.0] * 3, "n_outside": [0] * 3,
+                             "payload": [b"a", b"b", b"c"]})
+
+    monkeypatch.setattr(tin, "build_pack_blobs",
+                        lambda *a, **k: SplitRound())
+    with pytest.raises(ValueError, match="more than one blob for a cell"):
+        tin.certified_blobs(None, None, cell_res=4, id_col="pid")
